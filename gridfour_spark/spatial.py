@@ -330,7 +330,13 @@ def knn_join(
        ring*lon_step at the point's worst-case latitude band. If the point
        found >= k candidates and its k-th distance < LB, the disk top-k IS
        the global top-k (every nearer anchor is provably inside the disk).
-    5. points that fail the certificate (poles, sparse neighborhoods)
+    5. each disk pass persists its ranked, certified top-k ONCE: points x k
+       rows, the size of the output, where the candidate rows it is cut
+       from are points x anchors-in-disk. The certified output, the
+       uncertified sliver and the stats_out telemetry are filters over that
+       one frame, so the explode + join + window pass runs once per call
+       instead of once per consumer branch of the final union.
+       Points that fail the certificate (poles, sparse neighborhoods)
        RETRY once with a 3x-widened ring and re-certify (round-4 review:
        caps the exhaustive set when the failure is local sparseness, the
        common case); only points still uncertified after the escalation
@@ -423,16 +429,18 @@ def knn_join(
         d = haversine_km(lat, lon, F.col("_alat"), F.col("_alon"))
         cand = cand.withColumn("dist_km", F.round(d, 6))
 
-        w = Window.partitionBy(*pt_cols)
-        wo = w.orderBy(F.col("dist_km").asc_nulls_last(), F.col("anchor_id").asc_nulls_last())
+        wo = Window.partitionBy(*pt_cols).orderBy(
+            F.col("dist_km").asc_nulls_last(), F.col("anchor_id").asc_nulls_last()
+        )
+        # candidate count and k-th distance share the rank window's one
+        # sorted pass (the k-th distance only matters once _n >= k)
+        whole = wo.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
         cand = (
             cand.withColumn("rank", F.row_number().over(wo).cast("long"))
-            .withColumn("_n", F.count("anchor_id").over(w))
+            .withColumn("_n", F.count("anchor_id").over(whole))
+            .withColumn("_kd", F.nth_value("dist_km", k).over(whole))
             .filter(F.col("rank") <= k)
         )
-        # k-th distance among the kept rows (partitioning is preserved through
-        # the filter, so this window reuses the same exchange)
-        cand = cand.withColumn("_kd", F.max("dist_km").over(w))
 
         if full_cover:
             certified = F.col("_n") >= k  # disk = whole grid: nothing outside it
@@ -454,37 +462,29 @@ def knn_join(
             lb_km = 2.0 * 6371.0072 * F.asin(F.sqrt(a_lb))
             certified = (F.col("_n") >= k) & (F.col("_kd") + 1e-5 < lb_km)
 
-        out = cand.filter(certified & F.col("anchor_id").isNotNull()).select(
-            *pt_cols, "rank", "anchor_id", "dist_km"
+        # plan step 5: the ranked top-k (points x k rows; one null-anchor row
+        # for a point with no candidates) is the one materialization of
+        # this pass; every consumer below is a filter over it
+        ranked = _persist_tracked(
+            cand.select(*pt_cols, "rank", "anchor_id", "dist_km", certified.alias("_cert"))
         )
-        failed = cand.filter(~certified & (F.col("rank") == 1)).select(*pt_cols)
+        out = ranked.filter(F.col("_cert") & F.col("anchor_id").isNotNull()).drop("_cert")
+        failed = ranked.filter(~F.col("_cert") & (F.col("rank") == 1)).select(*pt_cols)
         return out, failed
 
     from gridfour_spark.textops import _persist_tracked
 
     out_cert, fb_pts = _disk_pass(points, ring)
-    # round 8 (guide §5 caching): the uncertified sliver is the INPUT of
-    # both the escalation pass and the exhaustive fallback, and every
-    # consumer branch of the final union otherwise re-evaluates the full
-    # upstream disk pass (explode + broadcast join + two windows over ALL
-    # points) through lineage — the polar-stress leg paid that recompute
-    # up to three times. Persisting the sliver bounds the cached state by
-    # the uncertified fraction (normally a sliver by the certificate
-    # design; in the all-polar worst case one row per point — disk-backed
-    # MEMORY_AND_DISK default), and the telemetry counts bench.py reads
-    # become cache hits instead of re-runs of the whole pass.
-    fb_pts = _persist_tracked(fb_pts)
     if stats_out is not None:
-        # telemetry frames (round-6 stretch: observable fallback cost for
-        # polar-heavy workloads); persisted above, so counting them no
-        # longer re-runs the disk passes.
+        # telemetry frames (observable fallback cost for polar-heavy
+        # workloads): filters over the persisted top-k, so counting them
+        # never re-runs a disk pass
         stats_out["points"] = points
         stats_out["escalated"] = fb_pts
     if (2 * ring + 1) < n_rows or (2 * ring + 1) < n_cols:
         # ring escalation: one re-certified retry at 3x width before paying
         # the exhaustive price (only the uncertified sliver re-enters)
         out_esc, fb_pts = _disk_pass(fb_pts, 3 * ring)
-        fb_pts = _persist_tracked(fb_pts)
         out_cert = out_cert.unionByName(out_esc)
     if stats_out is not None:
         stats_out["fallback"] = fb_pts

@@ -910,16 +910,26 @@ def bpe_train(
     left-to-right, non-overlapping), so merges and final state are
     bit-identical to the distributed loop (pinned by the scalar-reference
     tests and the driver's CTE-chain oracle).  n_merges Spark jobs — the
-    round-7 sequential-job wall — become TWO (type-table count + collect)
-    regardless of n_merges.
+    round-7 sequential-job wall — become ONE bounded collect of the type
+    table regardless of n_merges, and the corpus is aggregated once.
 
     Vocabularies past the threshold keep the distributed loop: one Spark
     job per merge round, lazy chained-replace application, lineage
     truncated every `_BPE_CKPT_EVERY` rounds."""
     spark = docs.sparkSession
-    st = bpe_word_types(docs, min_count=min_count)
-    if st.count() <= _BPE_DRIVER_MAX_TYPES:
-        rows = st.collect()
+    # one bounded collect is both the size test and the driver path's input:
+    # at most cap + 1 rows reach the driver, and the extra row marks an
+    # over-cap table. The cache lets that table's checkpoint reuse the one
+    # aggregation of the corpus; it is released before returning.
+    types_df = bpe_word_types(docs, min_count=min_count).persist()
+    try:
+        rows = types_df.limit(_BPE_DRIVER_MAX_TYPES + 1).collect()
+        if len(rows) > _BPE_DRIVER_MAX_TYPES:
+            rows = None
+            st = types_df.localCheckpoint(eager=True)
+    finally:
+        types_df.unpersist()
+    if rows is not None:
         types = [(r["word"], int(r["cnt"]), r["seq"]) for r in rows]
         merges = []
         for rank in range(n_merges):
@@ -940,7 +950,6 @@ def bpe_train(
         final = spark.createDataFrame(types, "word string, cnt long, seq string")
         return merges, final
 
-    st = st.localCheckpoint(eager=True)
     merges = []
     since_ckpt = 0
     for rank in range(n_merges):

@@ -33,6 +33,11 @@ def _anchors(n: int):
     ]
 
 
+def _polar_anchors():
+    """40 anchors crowded above 80N."""
+    return [(i, 80.5 + (i * 7 % 19) * 0.45, -170.0 + i * 8.5) for i in range(40)]
+
+
 def _points(n: int):
     pts = [
         (
@@ -190,8 +195,7 @@ def test_knn_polar_concentrated_anchors_telemetry(spark):
     high res drives NONZERO escalation/fallback telemetry — the regime the
     sf0.1 bench never reaches — and the answers must still equal brute
     force (the fallback is exact by construction)."""
-    # anchors crowded above 80N; points spread globally
-    anchors = [(i, 80.5 + (i * 7 % 19) * 0.45, -170.0 + i * 8.5) for i in range(40)]
+    anchors = _polar_anchors()
     points = _points(200)
     pdf = spark.createDataFrame(points, "pt_id int, lat double, lon double")
     adf = spark.createDataFrame(anchors, "anchor_id int, alat double, alon double")
