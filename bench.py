@@ -1,7 +1,8 @@
 """Benchmark harness (driver contract).
 
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+on local[$SPARK_GRAFT_CPUS] (default: the usable core count) and prints ONE
+JSON line:
   {"metric": ..., "value": <total sec>, "unit": "sec", "queries": {...}, "sf": ...,
    "docs_per_sec": ..., "spans_per_sec": ..., "scaling": {...}}
 
@@ -23,7 +24,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 
 # headline subset: the baseline-metric pipeline + representative operators
 BENCH_QUERIES = [

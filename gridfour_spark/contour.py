@@ -11,22 +11,24 @@ which makes it embarrassingly parallel AND expressible identically in
 Spark and an ANSI-SQL oracle.
 
 Scale shape (the 100 TB argument):
-  * stencil assembly is ONE equi-shuffle: every cell explodes into the <=4
-    stencils it participates in (a fixed 4x map fan-out, map-side
-    combinable), then one groupBy(anchor) reassembles the 2x2 corners.
-    No self-joins, no windows over two orderings, no halo collects.
-  * the per-(stencil, level) rule is pure JVM column arithmetic — whole-
-    stage codegen, no Python in the path.
+  * stencil assembly is ONE halo shuffle: every cell is keyed to the
+    B x B block of its stencil anchor, and only cells on a block's first
+    row/col copy to the neighbouring block as a 1-cell halo (<= 2/B
+    duplication). No self-joins, no windows, no halo collects.
+  * one Arrow group kernel per block (groupBy(block).applyInPandas)
+    scatters the (B+1)^2 local grid and evaluates the marching-squares
+    rule for every level as vectorized numpy. Per-task memory is bounded
+    by B; the block COUNT, not the task size, grows with the raster.
   * output is linear in contour length (sparse: only cells the isoline
     crosses emit rows), so the shuffle-out is tiny relative to the scan.
 
 Determinism contract: levels are chosen NON-INTEGER against the integer
 grid (no corner can ever sit exactly on a level), so the > comparison has
 no tie cases and every crossing denominator (zb - za) is a nonzero integer
-difference. All arithmetic is IEEE-double with identical expression text
-in both engines; emitted coordinates are quantized with floor(x * 1e6).
-Saddle cells (cases 5 / 10) disambiguate with the standard center-average
-rule — also closed-form.
+difference. All arithmetic is IEEE-double in the same operation order in
+the numpy kernel and the DuckDB twin (`segments_duckdb_sql`); emitted
+coordinates are quantized with floor(x * 1e6). Saddle cells (cases 5 / 10)
+disambiguate with the standard center-average rule — also closed-form.
 """
 
 from __future__ import annotations
@@ -57,100 +59,37 @@ _SADDLE = {
 }
 
 
-def stencil_2x2(cells: DataFrame) -> DataFrame:
-    """(row, col, z) cells -> (r, c, z00, z01, z10, z11) 2x2 stencils.
-
-    One equi-shuffle: each cell fans out to the (up to) four stencil
-    anchors it is a corner of, then a single groupBy reassembles them.
-    Interior-only anchors (all four corners present) survive the HAVING.
-    """
-    z = F.col("z").cast("double")
-    fan = cells.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("row").alias("r"), F.col("col").alias("c"), F.lit(0).alias("pos"), z.alias("zz")),
-                F.struct(F.col("row").alias("r"), (F.col("col") - 1).alias("c"), F.lit(1).alias("pos"), z.alias("zz")),
-                F.struct((F.col("row") - 1).alias("r"), F.col("col").alias("c"), F.lit(2).alias("pos"), z.alias("zz")),
-                F.struct((F.col("row") - 1).alias("r"), (F.col("col") - 1).alias("c"), F.lit(3).alias("pos"), z.alias("zz")),
-            )
-        ).alias("s")
-    ).select("s.*").filter((F.col("r") >= 0) & (F.col("c") >= 0))
-    g = fan.groupBy("r", "c").agg(
-        F.max(F.when(F.col("pos") == 0, F.col("zz"))).alias("z00"),
-        F.max(F.when(F.col("pos") == 1, F.col("zz"))).alias("z01"),
-        F.max(F.when(F.col("pos") == 2, F.col("zz"))).alias("z10"),
-        F.max(F.when(F.col("pos") == 3, F.col("zz"))).alias("z11"),
-        F.count("*").alias("_nc"),
-    )
-    return g.filter(F.col("_nc") == 4).drop("_nc")
-
-
-# default expression bindings: stencil columns z00..z11, anchor (r, c),
-# level column lev — the banded variant rebinds these to array subscripts
-_BIND = {
-    "z00": "z00", "z01": "z01", "z10": "z10", "z11": "z11",
-    "r": "CAST(r AS DOUBLE)", "c": "CAST(c AS DOUBLE)", "lev": "lev",
-}
-
-
-def _edge_point_sql(edge: str, b: dict) -> tuple[str, str]:
+def _edge_point_sql(edge: str) -> tuple[str, str]:
     """(x, y) SQL for the level crossing on an edge of the unit stencil at
-    anchor (r, c), in grid coordinates. Corner values are DOUBLE, lev is
-    the level DOUBLE; denominators are nonzero by the non-integer-level
-    contract."""
-    r, c, lev = b["r"], b["c"], b["lev"]
+    anchor (r, c), in grid coordinates. Corner values z00..z11 are DOUBLE,
+    lev is the level DOUBLE; denominators are nonzero by the
+    non-integer-level contract."""
+    r, c = "CAST(r AS DOUBLE)", "CAST(c AS DOUBLE)"
     if edge == "T":
-        return f"({c} + ({lev} - {b['z00']}) / ({b['z01']} - {b['z00']}))", r
+        return f"({c} + (lev - z00) / (z01 - z00))", r
     if edge == "B":
-        return f"({c} + ({lev} - {b['z10']}) / ({b['z11']} - {b['z10']}))", f"({r} + 1.0)"
+        return f"({c} + (lev - z10) / (z11 - z10))", f"({r} + 1.0)"
     if edge == "L":
-        return c, f"({r} + ({lev} - {b['z00']}) / ({b['z10']} - {b['z00']}))"
+        return c, f"({r} + (lev - z00) / (z10 - z00))"
     if edge == "R":
-        return f"({c} + 1.0)", f"({r} + ({lev} - {b['z01']}) / ({b['z11']} - {b['z01']}))"
+        return f"({c} + 1.0)", f"({r} + (lev - z01) / (z11 - z01))"
     raise ValueError(edge)
 
 
-def _seg_struct_sql(a: str, b_edge: str, b: dict) -> str:
-    x1, y1 = _edge_point_sql(a, b)
-    x2, y2 = _edge_point_sql(b_edge, b)
-    q = "CAST(floor({v} * 1e6) AS BIGINT)"
-    return (
-        "named_struct("
-        f"'x1', {q.format(v=x1)}, 'y1', {q.format(v=y1)}, "
-        f"'x2', {q.format(v=x2)}, 'y2', {q.format(v=y2)})"
-    )
-
-
-def case_idx_sql(b: dict | None = None) -> str:
+def case_idx_sql() -> str:
     """Marching-squares case index 0..15 from the corner comparisons."""
-    b = b or _BIND
     return (
-        f"(CASE WHEN {b['z00']} > {b['lev']} THEN 1 ELSE 0 END"
-        f" + CASE WHEN {b['z01']} > {b['lev']} THEN 2 ELSE 0 END"
-        f" + CASE WHEN {b['z11']} > {b['lev']} THEN 4 ELSE 0 END"
-        f" + CASE WHEN {b['z10']} > {b['lev']} THEN 8 ELSE 0 END)"
+        "(CASE WHEN z00 > lev THEN 1 ELSE 0 END"
+        " + CASE WHEN z01 > lev THEN 2 ELSE 0 END"
+        " + CASE WHEN z11 > lev THEN 4 ELSE 0 END"
+        " + CASE WHEN z10 > lev THEN 8 ELSE 0 END)"
     )
 
 
-def seg_array_sql(b: dict | None = None) -> str:
-    """array<struct<x1,y1,x2,y2>> of 0/1/2 segments for one (stencil, lev)
-    row. Identical text runs under Spark `F.expr` and is transcribed into
-    the DuckDB oracle by `segments_duckdb_sql` (DuckDB spells named_struct
-    as struct_pack — the arithmetic inside is character-identical)."""
-    b = b or _BIND
-    center = f"(({b['z00']} + {b['z01']} + {b['z10']} + {b['z11']}) / 4.0)"
-    whens = []
-    for idx, segs in _CASE_SEGS.items():
-        arr = ", ".join(_seg_struct_sql(x, y, b) for x, y in segs)
-        whens.append(f"WHEN {idx} THEN array({arr})")
-    for idx, variants in _SADDLE.items():
-        hi = ", ".join(_seg_struct_sql(x, y, b) for x, y in variants[True])
-        lo = ", ".join(_seg_struct_sql(x, y, b) for x, y in variants[False])
-        whens.append(
-            f"WHEN {idx} THEN CASE WHEN {center} > {b['lev']}"
-            f" THEN array({hi}) ELSE array({lo}) END"
-        )
-    return f"CASE {case_idx_sql(b)} {' '.join(whens)} END"
+# block edge B: bounds one task's scatter array at (B+1)^2 float64
+# ~= 2 MB regardless of grid size (block COUNT scales with the raster;
+# per-task memory does not — guide §5). Read at call time.
+_SEG_BLOCK = 512
 
 
 def segments(cells: DataFrame, levels: list[float]) -> DataFrame:
@@ -158,67 +97,22 @@ def segments(cells: DataFrame, levels: list[float]) -> DataFrame:
 
     Returns (lev_milli long, r, c, x1, y1, x2, y2) — one row per segment,
     endpoint coordinates quantized to micro-cells (floor(x * 1e6)), level
-    tagged as floor(lev * 1000). Round 8: routes to the BLOCKED plan
-    (`segments_blocked` — one block shuffle + a vectorized numpy marching-
-    squares kernel per block), which measured 18.8 s -> ~3 s on the global
-    DEM versus the expression-tree plan. The expression plan survives as
-    `segments_exprs` (tests pin the two row-identical; it remains the
-    zero-Python fallback)."""
-    return segments_blocked(cells, levels)
+    tagged as floor(lev * 1000).
 
-
-def segments_exprs(cells: DataFrame, levels: list[float]) -> DataFrame:
-    """The pre-r8 pure-JVM plan: narrow 4x fan-out -> one shuffle
-    (stencil) -> explode over the level list -> codegen'd case arithmetic
-    -> explode of the 0/1/2-segment array. Sparse output: non-crossing
-    (stencil, level) pairs emit nothing. Kept as the no-Python fallback
-    and as the independent twin the blocked kernel is pinned against."""
-    st = stencil_2x2(cells)
-    lev_arr = F.array(*[F.lit(float(v)) for v in levels])
-    out = (
-        st.withColumn("lev", F.explode(lev_arr))
-        .withColumn("segs", F.expr(seg_array_sql()))
-        .filter(F.col("segs").isNotNull())
-        .withColumn("seg", F.explode("segs"))
-    )
-    return out.select(
-        F.floor(F.col("lev") * 1000.0).cast("long").alias("lev_milli"),
-        F.col("r").cast("long").alias("r"),
-        F.col("c").cast("long").alias("c"),
-        F.col("seg.x1").alias("x1"),
-        F.col("seg.y1").alias("y1"),
-        F.col("seg.x2").alias("x2"),
-        F.col("seg.y2").alias("y2"),
-    )
-
-
-# blocked-kernel tile edge: bounds one task's scatter array at
-# (B+1)^2 float64 ~= 2 MB regardless of grid size (block COUNT scales
-# with the raster; per-task memory does not — guide §5)
-_SEG_BLOCK = 512
-
-
-def segments_blocked(
-    cells: DataFrame, levels: list[float], block: int = _SEG_BLOCK
-) -> DataFrame:
-    """`segments` as one halo shuffle + per-block numpy marching squares.
-
-    Plan (round 8, the A/B the round-7 verdict asked for): every cell is
-    keyed to the block of its stencil ANCHOR — cells on a block's first
-    row/col additionally copy to the previous block as a 1-cell halo
-    (<= 2/B duplication instead of the expression plan's 4x fan-out) —
-    then ONE groupBy(block).applyInPandas kernel scatters the (B+1)^2
-    local grid and evaluates all levels vectorized. The per-stencil
-    arithmetic is operation-for-operation the SQL tree of seg_array_sql
+    Plan: every cell is keyed to the block of its stencil ANCHOR — cells on
+    a block's first row/col additionally copy to the previous block as a
+    1-cell halo — then ONE groupBy(block).applyInPandas kernel scatters the
+    (B+1)^2 local grid and evaluates all levels vectorized. The per-stencil
+    arithmetic is operation-for-operation the SQL of `segments_duckdb_sql`
     (same IEEE-double op order, same floor(x*1e6) quantization, same
     center-average saddle rule), so output is row-identical — pinned in
     tests and by the histogram suite's oracle hash. Stencils with any
-    missing corner are masked out, matching stencil_2x2's count==4 filter.
+    missing corner emit nothing, like the twin's inner self-joins.
     """
     import numpy as np
     import pandas as pd
 
-    B = int(block)
+    B = _SEG_BLOCK
     levs = [float(v) for v in levels]
 
     rb = F.expr(f"row div {B}")
@@ -277,34 +171,24 @@ def segments_blocked(
             lev_milli = int(np.floor(lev * 1000.0))
             for idx in range(1, 15):
                 if idx in _SADDLE:
-                    variants = _SADDLE[idx]
-                    for hi in (True, False):
-                        m = np.nonzero((case == idx) & ((center > lev) == hi))[0]
-                        if not len(m):
-                            continue
-                        for e1, e2 in variants[hi]:
-                            x1, y1 = edge_pt(e1, m)
-                            x2, y2 = edge_pt(e2, m)
-                            out_lev.append(np.full(len(m), lev_milli, dtype=np.int64))
-                            out_r.append(rr[m] + brow * B)
-                            out_c.append(cc[m] + bcol * B)
-                            for k, v in zip(("x1", "y1", "x2", "y2"), (x1, y1, x2, y2)):
-                                out_q[k].append(np.floor(v * 1e6).astype(np.int64))
-                    continue
-                segs = _CASE_SEGS.get(idx)
-                if not segs:
-                    continue
-                m = np.nonzero(case == idx)[0]
-                if not len(m):
-                    continue
-                for e1, e2 in segs:
-                    x1, y1 = edge_pt(e1, m)
-                    x2, y2 = edge_pt(e2, m)
-                    out_lev.append(np.full(len(m), lev_milli, dtype=np.int64))
-                    out_r.append(rr[m] + brow * B)
-                    out_c.append(cc[m] + bcol * B)
-                    for k, v in zip(("x1", "y1", "x2", "y2"), (x1, y1, x2, y2)):
-                        out_q[k].append(np.floor(v * 1e6).astype(np.int64))
+                    groups = [
+                        ((case == idx) & ((center > lev) == hi), _SADDLE[idx][hi])
+                        for hi in (True, False)
+                    ]
+                else:
+                    groups = [(case == idx, _CASE_SEGS[idx])]
+                for mask, segs in groups:
+                    m = np.nonzero(mask)[0]
+                    if not len(m):
+                        continue
+                    for e1, e2 in segs:
+                        x1, y1 = edge_pt(e1, m)
+                        x2, y2 = edge_pt(e2, m)
+                        out_lev.append(np.full(len(m), lev_milli, dtype=np.int64))
+                        out_r.append(rr[m] + brow * B)
+                        out_c.append(cc[m] + bcol * B)
+                        for k, v in zip(("x1", "y1", "x2", "y2"), (x1, y1, x2, y2)):
+                            out_q[k].append(np.floor(v * 1e6).astype(np.int64))
         if not out_lev:
             return pd.DataFrame(
                 {k: pd.Series(dtype="int64")
@@ -325,83 +209,6 @@ def segments_blocked(
     )
 
 
-def segments_banded(
-    cells: DataFrame, levels: list[float], band_w: int = 2048
-) -> DataFrame:
-    """`segments` with the fan-out shuffle replaced by a banded plan
-    (row-identical output; pytest-pinned equal to `segments`).
-
-    Each cell is shuffled ONCE into its (row, column-band) group — only
-    band-boundary cells duplicate into the previous band as a 1-column
-    halo, a 1/band_w overhead — the group agg builds a column-sorted
-    (col, z) array per band-row, a self-join on (row+1, band) pairs the
-    top/bottom arrays, and the identical marching-squares CASE evaluates
-    with corners bound to ae[i]/be[i] lambda subscripts. band_w bounds
-    executor memory: a band-row is <= (band_w+1) structs regardless of
-    grid width.
-
-    MEASURED (local[32], global 1800x3600 DEM, 5 levels): this plan is
-    ~2.5x SLOWER than `segments` (49 s vs 19.5 s) — higher-order-function
-    lambdas evaluate interpreted while the fan-out path stays inside
-    whole-stage codegen, and on local mode the fan-out's shuffle cost is
-    illusory anyway (row-major input partitions co-locate the 4 anchors,
-    so the map-side partial agg collapses most of the 4x fan before any
-    bytes move). `segments` is therefore the default. This variant exists
-    for the regime local mode cannot exhibit: a network-bound cluster
-    shuffle where the 4x row volume, not CPU, is the bottleneck — it
-    moves ~1x the cells and trades interpreted eval for those bytes."""
-    c = F.col("col")
-    zc = F.struct(c.alias("c"), F.col("z").cast("double").alias("z"))
-    base = cells.select(F.col("row").alias("r"), (c / band_w).cast("long").alias("_b"), zc.alias("s"))
-    halo = cells.filter((c % band_w == 0) & (c > 0)).select(
-        F.col("row").alias("r"), ((c / band_w).cast("long") - 1).alias("_b"), zc.alias("s")
-    )
-    rows = (
-        base.unionByName(halo)
-        .groupBy("r", "_b")
-        .agg(F.array_sort(F.collect_list("s")).alias("ae"))
-    )
-    bot = rows.select((F.col("r") - 1).alias("r"), "_b", F.col("ae").alias("be"))
-    j = rows.join(bot, ["r", "_b"])
-    lev_arr = F.array(*[F.lit(float(v)) for v in levels])
-    bind = {
-        "z00": "ae[i].z", "z01": "ae[i+1].z",
-        "z10": "be[i].z", "z11": "be[i+1].z",
-        "r": "CAST(r AS DOUBLE)", "c": "CAST(ae[i].c AS DOUBLE)", "lev": "lev",
-    }
-    # alignment guard (round-7 advisory): only emit when the four corners
-    # really are the (c, c+1) columns of both rows — on a grid with missing
-    # cells the array indices misalign and the unguarded pairing would
-    # build stencils from non-adjacent columns; with the guard those pairs
-    # emit nothing (note: sparse grids may still have valid stencils at
-    # mismatched indices — use `segments`, which handles sparsity exactly,
-    # for non-dense input)
-    aligned = (
-        "ae[i+1].c = ae[i].c + 1 AND be[i].c = ae[i].c AND be[i+1].c = ae[i].c + 1"
-    )
-    per_i = (
-        "CASE WHEN size(ae) < 2 THEN array() ELSE "
-        "transform(sequence(0, size(ae) - 2), i -> "
-        f"named_struct('ac', ae[i].c, 'segs', CASE WHEN {aligned} "
-        f"THEN {seg_array_sql(bind)} ELSE NULL END)) END"
-    )
-    out = (
-        j.withColumn("lev", F.explode(lev_arr))
-        .select("r", "lev", F.explode(F.expr(per_i)).alias("p"))
-        .filter(F.col("p.segs").isNotNull())
-        .select("r", "lev", F.col("p.ac").alias("c"), F.explode("p.segs").alias("seg"))
-    )
-    return out.select(
-        F.floor(F.col("lev") * 1000.0).cast("long").alias("lev_milli"),
-        F.col("r").cast("long").alias("r"),
-        F.col("c").cast("long").alias("c"),
-        F.col("seg.x1").alias("x1"),
-        F.col("seg.y1").alias("y1"),
-        F.col("seg.x2").alias("x2"),
-        F.col("seg.y2").alias("y2"),
-    )
-
-
 def _coord_stats(segs: DataFrame) -> tuple:
     """(max_x, max_y, n_segments) in one agg — feeds both the packed-id
     bound check and the scale-adaptive CC band width."""
@@ -411,18 +218,6 @@ def _coord_stats(segs: DataFrame) -> tuple:
         F.count(F.lit(1)).alias("n"),
     ).collect()[0]
     return row["mx"], row["my"], row["n"]
-
-
-def _coords_fit_packed(segs: DataFrame) -> bool:
-    """True when every quantized coordinate fits the packed-long vertex id
-    (x_u, y_u < 2^30): ((x << 30) | y) * 8 + li must stay under 2^63 —
-    beyond it the multiply wraps mod 2^64 and, because *8 is not
-    injective there, vertices exactly 2^31 apart in x would COLLIDE and
-    silently merge distinct curves. One cheap agg over the (already tiny
-    relative to CC) segment set buys the guarantee."""
-    mx, my, _n = _coord_stats(segs)
-    lim = 1 << 30
-    return mx is not None and mx < lim and my < lim
 
 
 # target edges per CC band: one band's union-find must fit one executor
@@ -551,39 +346,33 @@ def _cc_segments(e: DataFrame, mx: int, n_edges: int, id_type: str) -> DataFrame
     )
 
 
-def topology(segs: DataFrame, levels: list[float], wide: bool | None = None) -> DataFrame:
-    """Per-level contour topology: assemble the segment soup into curves
-    with DISTRIBUTED connected components and report, per level,
-    (n_segments, n_vertices, n_components, n_odd_vertices).
+def _vertex_ids(segs: DataFrame, levels: list[float]) -> tuple:
+    """The one vertex-id rule of `topology` and `polylines`.
 
-    Level sets of a grid function are disjoint closed loops plus chains
-    that end on the grid boundary, so n_odd counts chain endpoints (all on
-    the boundary — tests assert it) and n_components counts curves. The
-    CC is textops.dedup_clusters' pointer-doubling min-label propagation
-    (O(log diameter) rounds, localCheckpoint-bounded lineage). Vertex ids:
-    node = ((x_u << 30) | y_u) << 3 | lev_idx, exact while y_u < 2^30 and
-    x_u < 2^30 (grids up to ~1073 x 1073 cells); beyond that the id is
-    the 'lev:x:y' STRING and min-label propagates lexicographically —
-    same algorithm, deterministic labels at any grid size, heavier
-    shuffle keys (pytest pins both paths equal). wide=None (default)
-    AUTO-selects by measuring the coordinate range; pass True/False to
-    force. More than 8 levels always forces the wide path: the packed id
-    reserves only 3 bits for the level index, and level_idx 8 would alias
-    the (x, y+1) level-0 vertex (round-7 advisory)."""
+    Returns (s, id_type, mx, n_edges): `segs` plus its level index `_li`
+    and the endpoint ids `_va` (x1, y1) and `_vb` (x2, y2); mx and n_edges
+    come from the same `_coord_stats` agg and size the CC bands. Ids are
+    packed longs ((x_u << 30) | y_u) << 3 | lev_idx while every coordinate
+    is < 2^30 (grids up to ~1073 x 1073 cells) and there are at most 8
+    levels. Otherwise they are 'lev:x:y' STRINGS with lpad'ed coordinates,
+    whose lexicographic order equals numeric order: past 2^30 the packed
+    multiply wraps mod 2^64 and, because *8 is not injective there,
+    vertices exactly 2^31 apart in x would COLLIDE; a 9th level would
+    alias the (x, y+1) level-0 vertex (the id has 3 level bits)."""
     import math
 
+    lev_arr = F.array(*[F.lit(math.floor(v * 1000)) for v in levels])
+    s = segs.withColumn("_li", (F.array_position(lev_arr, F.col("lev_milli")) - 1).cast("long"))
     mx, my, n_edges = _coord_stats(segs)
     lim = 1 << 30
-    fits = mx is not None and mx < lim and my < lim
-    if wide is None:
-        wide = not fits
-    wide = wide or len(levels) > 8
+    if mx is not None and mx < lim and my < lim and len(levels) <= 8:
+        id_type = "long"
 
-    lev_arr = F.array(*[F.lit(math.floor(v * 1000)) for v in levels])
-    li = (F.array_position(lev_arr, F.col("lev_milli")) - 1).cast("long")
-    s = segs.withColumn("_li", li)
+        def enc(x, y):
+            return ((F.col(x) * F.lit(1 << 30) + F.col(y)) * 8 + F.col("_li")).cast("long")
+    else:
+        id_type = "string"
 
-    if wide:
         # F.concat, NOT F.concat_ws: concat_ws-derived join keys under the
         # CC loop's localCheckpoint trip the Spark 4.1 Catalyst
         # AttributeMap bug ("key not found: doc_id#N" at optimization) —
@@ -595,22 +384,30 @@ def topology(segs: DataFrame, levels: list[float], wide: bool | None = None) -> 
                 F.lpad(F.col(y).cast("string"), 20, "0"),
             )
 
-        lev_of = F.split(F.col("doc_id"), ":").getItem(0).cast("int")
-    else:
-        def enc(x, y):
-            return (
-                (F.col(x) * F.lit(1 << 30) + F.col(y)) * 8 + F.col("_li")
-            ).cast("long")
+    s = s.withColumn("_va", enc("x1", "y1")).withColumn("_vb", enc("x2", "y2"))
+    return s, id_type, mx or 0, n_edges
 
-        lev_of = (F.col("doc_id") % 8).cast("int")
 
-    id_type = "string" if wide else "long"
-    pairs = s.select(enc("x1", "y1").alias("_va"), enc("x2", "y2").alias("_vb"), "x1")
-    comp = _cc_segments(pairs, mx or 0, n_edges, id_type).withColumnRenamed(
-        "node", "doc_id"
-    )
+def topology(segs: DataFrame, levels: list[float]) -> DataFrame:
+    """Per-level contour topology: assemble the segment soup into curves
+    with DISTRIBUTED connected components and report, per level,
+    (n_segments, n_vertices, n_components, n_odd_vertices).
+
+    Level sets of a grid function are disjoint closed loops plus chains
+    that end on the grid boundary, so n_odd counts chain endpoints (all on
+    the boundary — tests assert it) and n_components counts curves. The
+    CC is `_cc_segments`' banded union-find (one union-find task per
+    x band, then one over the contracted band-crossing graph). Vertex ids
+    follow `_vertex_ids`: packed longs on small grids, 'lev:x:y' strings
+    beyond 2^30 micro-cells or 8 levels — the choice comes from the
+    measured coordinates and the level count, and the counts are the same
+    either way (pytest pins both equal)."""
+    s, id_type, mx, n_edges = _vertex_ids(segs, levels)
+    comp = _cc_segments(s.select("_va", "_vb", "x1"), mx, n_edges, id_type)
+    node = F.col("node")
+    lev_of = node % 8 if id_type == "long" else F.split(node, ":").getItem(0)
     n_comp = (
-        comp.select(lev_of.alias("_li"), "comp")
+        comp.select(lev_of.cast("long").alias("_li"), "comp")
         .groupBy("_li")
         .agg(F.count_distinct("comp").alias("n_components"))
     )
@@ -622,13 +419,9 @@ def topology(segs: DataFrame, levels: list[float], wide: bool | None = None) -> 
         F.count("*").alias("n_vertices"),
         F.sum(F.when(F.col("deg") % 2 == 1, 1).otherwise(0)).alias("n_odd"),
     )
-    nseg = s.groupBy("_li").agg(F.count("*").alias("n_segments"))
+    nseg = s.groupBy("_li", "lev_milli").agg(F.count("*").alias("n_segments"))
     out = nseg.join(vstats, "_li").join(n_comp, "_li")
-    lev_milli = F.element_at(lev_arr, (F.col("_li") + 1).cast("int")).cast("long")
-    return out.select(
-        lev_milli.alias("lev_milli"),
-        "n_segments", "n_vertices", "n_components", "n_odd",
-    )
+    return out.select("lev_milli", "n_segments", "n_vertices", "n_components", "n_odd")
 
 
 def polylines(segs: DataFrame, levels: list[float]) -> DataFrame:
@@ -636,7 +429,7 @@ def polylines(segs: DataFrame, levels: list[float]) -> DataFrame:
 
     Returns (lev_milli, comp, seq, x, y) — for every curve, its vertices
     in traversal order. Curves are identified DISTRIBUTED (the same
-    pointer-doubling CC as `topology`; comp = the min packed vertex id of
+    banded CC as `topology`; comp = the min vertex id of
     the curve); each curve then assembles inside ONE Arrow group task
     (`applyInPandas` over comp): inter-curve parallelism is the scale
     axis — a 100 TB DEM has millions of short curves, not one long one —
@@ -647,70 +440,32 @@ def polylines(segs: DataFrame, levels: list[float]) -> DataFrame:
     noted here as the escalation path, not built).
 
     Deterministic traversal: chains start at their smallest odd-degree
-    (boundary) vertex id; closed loops at their smallest vertex id,
-    stepping first to the smaller of its two neighbors. Output vertex
-    coords are the quantized segment endpoints, so the frame is exact and
-    hash-comparable (tests pin it against a scalar walk). Vertex-id
-    packing auto-selects like `topology`: packed longs while coordinates
-    fit 2^30, the overflow-safe 'lev:x:y' string beyond (comp becomes the
-    min packed id or min string respectively — the walk itself always
-    uses raw coordinates, so only the curve LABEL changes form)."""
-    import math
-
-    import pandas as pd  # noqa: F401 (executor-side)
-
-    lev_arr = F.array(*[F.lit(math.floor(v * 1000)) for v in levels])
-    li = (F.array_position(lev_arr, F.col("lev_milli")) - 1).cast("long")
-    s = segs.withColumn("_li", li)
-
-    mx, my, n_edges = _coord_stats(segs)
-    lim = 1 << 30
-    # >8 levels forces the wide path — the packed id has 3 level bits
-    # (round-7 advisory, same rule as topology)
-    if mx is not None and mx < lim and my < lim and len(levels) <= 8:
-        def enc(x, y):
-            return (
-                (F.col(x) * F.lit(1 << 30) + F.col(y)) * 8 + F.col("_li")
-            ).cast("long")
-
-        comp_type = "long"
-    else:
-        # F.concat, not concat_ws — see topology's landmine note
-        def enc(x, y):
-            return F.concat(
-                F.col("_li").cast("string"), F.lit(":"),
-                F.lpad(F.col(x).cast("string"), 20, "0"), F.lit(":"),
-                F.lpad(F.col(y).cast("string"), 20, "0"),
-            )
-
-        comp_type = "string"
-
-    e = s.select(
-        "lev_milli", "x1", "y1", "x2", "y2",
-        enc("x1", "y1").alias("_va"), enc("x2", "y2").alias("_vb"),
-    )
-    # banded two-level CC (see _cc_segments) replaces full-graph pointer
-    # doubling; the walk below is unchanged, so the output frame is
-    # row-identical (comp = min vertex id of the curve either way)
+    (boundary) vertex; closed loops at their smallest vertex. Each step
+    moves to the smallest neighbour other than the vertex just left, for
+    any degree and with repeated segments. Output vertex coords are the
+    quantized segment endpoints, so the frame is exact and hash-comparable
+    (tests pin it against a scalar walk). comp is a packed long or a
+    'lev:x:y' string as `_vertex_ids` decides — the walk itself always
+    uses raw coordinates, so only the curve LABEL changes form."""
+    s, comp_type, mx, n_edges = _vertex_ids(segs, levels)
     lab = _cc_segments(
-        e.select("_va", "_vb", "x1"), mx or 0, n_edges, comp_type
+        s.select("_va", "_vb", "x1"), mx, n_edges, comp_type
     ).withColumnRenamed("node", "_va")
     # project the walk's inputs only — _vb never crosses the group shuffle
     # (no broadcast hint: lab is O(vertices), which outgrows any broadcast
     # budget at 100x scale; the planner picks from runtime sizes)
-    e = e.select("lev_milli", "x1", "y1", "x2", "y2", "_va").join(lab, "_va").drop("_va")
+    e = s.select("lev_milli", "x1", "y1", "x2", "y2", "_va").join(lab, "_va").drop("_va")
 
     def walk(key, pdf):
         import numpy as np
         import pandas as pd
 
         L = len(pdf)
-        # vectorized vertex table + neighbor slots (round 8): the per-step
-        # dict/tuple/sorted() machinery of the original walk was ~10x the
-        # cost of the traversal itself. np.unique(axis=0) returns vertices
-        # in lexicographic (x, y) order, so integer vertex-id comparisons
-        # reproduce the original tuple comparisons exactly; a lexsort of
-        # the directed darts yields each vertex's neighbors pre-sorted.
+        # vectorized vertex table + CSR neighbour lists: np.unique(axis=0)
+        # returns vertices in lexicographic (x, y) order, so integer vertex
+        # ids compare like the coordinate tuples; a lexsort of the directed
+        # darts lists each vertex's neighbours sorted in
+        # dst_s[first[v]:last[v]], repeats included.
         pts_arr = np.stack(
             [
                 np.concatenate([pdf["x1"].to_numpy(np.int64), pdf["x2"].to_numpy(np.int64)]),
@@ -721,65 +476,36 @@ def polylines(segs: DataFrame, levels: list[float]) -> DataFrame:
         verts, inv = np.unique(pts_arr, axis=0, return_inverse=True)
         inv = inv.ravel()
         a, b = inv[:L], inv[L:]
-        nv = len(verts)
+        ids = np.arange(len(verts))
         src = np.concatenate([a, b])
         dst = np.concatenate([b, a])
         order = np.lexsort((dst, src))
         src_s, dst_s = src[order], dst[order]
-        first = np.searchsorted(src_s, np.arange(nv), side="left")
-        deg = np.searchsorted(src_s, np.arange(nv), side="right") - first
-
-        if deg.max() <= 2:
-            nb0 = dst_s[first]
-            nb1 = np.where(deg > 1, dst_s[np.minimum(first + 1, 2 * L - 1)], -1)
-            odd_ids = np.nonzero(deg % 2 == 1)[0]
-            start = int(odd_ids[0]) if len(odd_ids) else 0
-            prev, cur = -1, start
-            seq = []
-            n0l, n1l = nb0.tolist(), nb1.tolist()
-            for _ in range(L + 1):
-                seq.append(cur)
-                n0, n1 = n0l[cur], n1l[cur]
-                if n0 == prev:
-                    n0 = n1 if n1 != prev else -1
-                if n0 < 0:
-                    break  # chain end (degree-1 vertex)
-                prev, cur = cur, n0
-                if cur == start and len(seq) == L:
-                    seq.append(cur)  # close the loop explicitly
-                    break
-            seq = np.asarray(seq, dtype=np.int64)
-            xs, ys = verts[seq, 0], verts[seq, 1]
-        else:
-            # degree > 2 soup: the general dict walk (original semantics)
-            adj: dict = {}
-            for x1, y1, x2, y2 in zip(pdf["x1"], pdf["y1"], pdf["x2"], pdf["y2"]):
-                va, vb = (int(x1), int(y1)), (int(x2), int(y2))
-                adj.setdefault(va, []).append(vb)
-                adj.setdefault(vb, []).append(va)
-            odd = sorted(v for v, ns in adj.items() if len(ns) % 2 == 1)
-            t_start = odd[0] if odd else min(adj)
-            t_prev = None
-            t_cur = t_start
-            tseq = []
-            for _ in range(L + 1):
-                tseq.append(t_cur)
-                ns = sorted(n for n in adj[t_cur] if n != t_prev)
-                if not ns:
-                    break
-                t_prev, t_cur = t_cur, ns[0]
-                if t_cur == t_start and len(tseq) == L:
-                    tseq.append(t_cur)
-                    break
-            xs = np.asarray([v[0] for v in tseq], dtype=np.int64)
-            ys = np.asarray([v[1] for v in tseq], dtype=np.int64)
-
+        first = np.searchsorted(src_s, ids, side="left")
+        last = np.searchsorted(src_s, ids, side="right")
+        odd_ids = np.nonzero((last - first) % 2 == 1)[0]
+        start = int(odd_ids[0]) if len(odd_ids) else 0
+        nbr, fst, lst = dst_s.tolist(), first.tolist(), last.tolist()
+        prev, cur = -1, start
+        seq = []
+        for _ in range(L + 1):
+            seq.append(cur)
+            k, end = fst[cur], lst[cur]
+            while k < end and nbr[k] == prev:
+                k += 1
+            if k == end:
+                break  # chain end: no neighbour but the one just left
+            prev, cur = cur, nbr[k]
+            if cur == start and len(seq) == L:
+                seq.append(cur)  # close the loop explicitly
+                break
+        seq = np.asarray(seq, dtype=np.int64)
         return pd.DataFrame({
             "lev_milli": pdf["lev_milli"].iloc[0],
             "comp": key[0],
-            "seq": range(len(xs)),
-            "x": xs,
-            "y": ys,
+            "seq": range(len(seq)),
+            "x": verts[seq, 0],
+            "y": verts[seq, 1],
         })
 
     return e.groupBy("comp").applyInPandas(
@@ -889,9 +615,9 @@ def segments_duckdb_sql(grid_sql: str, levels: list[float]) -> str:
     """DuckDB twin of `segments` over the same (row, col, z) grid SQL.
 
     The oracle assembles the 2x2 stencil with three self-joins (fine at
-    oracle scale) and evaluates the CHARACTER-IDENTICAL crossing
-    arithmetic; Spark's named_struct/array cases are transcribed to a
-    UNION ALL over the two segment slots."""
+    oracle scale) and evaluates the same crossing arithmetic as the numpy
+    kernel, in the same IEEE-double operation order, as a UNION ALL over
+    the two segment slots (the second only for saddles)."""
     center = "((z00 + z01 + z10 + z11) / 4.0)"
     q = "CAST(floor({v} * 1e6) AS BIGINT)"
 
@@ -913,8 +639,8 @@ def segments_duckdb_sql(grid_sql: str, levels: list[float]) -> str:
         return f"CASE {case_idx_sql()} {' '.join(whens)} END"
 
     def _pack(a: str, b: str) -> str:
-        x1, y1 = _edge_point_sql(a, _BIND)
-        x2, y2 = _edge_point_sql(b, _BIND)
+        x1, y1 = _edge_point_sql(a)
+        x2, y2 = _edge_point_sql(b)
         return (
             f"x1 := {q.format(v=x1)}, y1 := {q.format(v=y1)}, "
             f"x2 := {q.format(v=x2)}, y2 := {q.format(v=y2)}"

@@ -117,25 +117,27 @@ class RollupStore:
         # aggregation re-ran through lineage on the second consumer
         # (round 8; state bounded by the delta's bucket count)
         delta = minute_aggregate(new_events, keys=self.keys).persist()
-        # touched-day list is metadata-sized (distinct days in the delta)
-        days = [r["d"] for r in delta.select("d").distinct().collect()]
-        if not days:
-            delta.unpersist()
-            return {"days_refreshed": 0}
-        # partition-pruned read: only the touched day directories are listed
-        # and scanned (PushedFilters on the partition column)
-        stored = self.minute().filter(F.col("d").isin(days))
-        merged = combine_partials(stored.unionByName(delta), self.keys)
-        # localCheckpoint cuts the lineage back to the source files so the
-        # dynamic-partition overwrite of the path being read is legal (and
-        # holds only the touched partitions + delta, bounded by the delta)
-        merged = merged.localCheckpoint()
-        conf = self.spark.conf
-        prev = conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
-            merged.write.mode("overwrite").partitionBy("d").parquet(self.path)
+            # touched-day list is metadata-sized (distinct days in the delta)
+            days = [r["d"] for r in delta.select("d").distinct().collect()]
+            if not days:
+                return {"days_refreshed": 0}
+            # partition-pruned read: only the touched day directories are
+            # listed and scanned (PushedFilters on the partition column)
+            stored = self.minute().filter(F.col("d").isin(days))
+            merged = combine_partials(stored.unionByName(delta), self.keys)
+            # localCheckpoint cuts the lineage back to the source files so
+            # the dynamic-partition overwrite of the path being read is
+            # legal (and holds only the touched partitions + delta, bounded
+            # by the delta)
+            merged = merged.localCheckpoint()
+            conf = self.spark.conf
+            prev = conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+            conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+            try:
+                merged.write.mode("overwrite").partitionBy("d").parquet(self.path)
+            finally:
+                conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+            return {"days_refreshed": len(days)}
         finally:
-            conf.set("spark.sql.sources.partitionOverwriteMode", prev)
             delta.unpersist()
-        return {"days_refreshed": len(days)}

@@ -19,10 +19,12 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # unset SPARK_GRAFT_CPUS means the cores this process may run on
+    cores = str(len(os.sched_getaffinity(0)))
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", cores)
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
-        n = cpus if cpus.isdigit() else "32"
+        n = cpus if cpus.isdigit() else cores
         shuffle_partitions = max(int(n), 8)
     builder = (
         SparkSession.builder.appName(app_name)

@@ -2,8 +2,9 @@
 
 Checks: scalar-reference equality, DuckDB-oracle equality, the level-set
 property (every endpoint interpolates to exactly the level), topology
-(every contour vertex has even degree or sits on the grid boundary), and
-partitioning invariance of the fan-out/groupBy stencil assembly.
+(every contour vertex has even degree or sits on the grid boundary),
+partitioning invariance of the block halo shuffle, and the polyline walk
+against a scalar reference walk.
 """
 
 from __future__ import annotations
@@ -137,20 +138,9 @@ def test_partitioning_invariance(spark, seg_rows):
     assert sorted(tuple(r) for r in df.collect()) == seg_rows
 
 
-def test_expr_plan_is_jvm_only(spark):
-    """The preserved expression-tree variant stays pure-JVM."""
-    cells = synth.grid_df(spark, SPEC, value="dem")
-    df = contour.segments_exprs(cells, LEVELS)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan
-    assert "CartesianProduct" not in plan
-    # stencil assembly is the only shuffle
-    assert plan.count("Exchange") <= 2
-
-
 def test_blocked_plan_shape(spark):
-    """The round-8 default (blocked numpy kernel): one block shuffle, an
-    Arrow group kernel (never a row-wise BatchEvalPython), no cartesian."""
+    """The blocked numpy kernel: one block shuffle, an Arrow group kernel
+    (never a row-wise BatchEvalPython), no cartesian."""
     cells = synth.grid_df(spark, SPEC, value="dem")
     df = contour.segments(cells, LEVELS)
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -160,23 +150,25 @@ def test_blocked_plan_shape(spark):
     assert plan.count("Exchange") <= 2
 
 
-def test_blocked_matches_exprs_with_halos_and_holes(spark, seg_rows):
-    """segments_blocked must equal the expression plan row-for-row,
-    including (a) block sizes that force halo traffic and don't divide the
-    grid, and (b) a holey grid where missing corners must suppress the
-    stencil exactly like the count==4 filter."""
+def test_blocked_halos_and_holes_match_references(spark, monkeypatch, seg_rows):
+    """segments must equal the scalar reference row-for-row for block
+    sizes that force halo traffic and don't divide the grid, and the DuckDB
+    twin on a holey grid, where a missing corner must suppress the stencil
+    exactly like the twin's inner self-joins."""
     cells = synth.grid_df(spark, SPEC, value="dem")
     for blk in (16, 33, 512):
-        got = sorted(
-            tuple(r)
-            for r in contour.segments_blocked(cells, LEVELS, block=blk).collect()
-        )
+        monkeypatch.setattr(contour, "_SEG_BLOCK", blk)
+        got = sorted(tuple(r) for r in contour.segments(cells, LEVELS).collect())
         assert got == seg_rows, blk
-    holey = cells.filter((F.col("row") * 31 + F.col("col") * 17) % 13 != 0)
-    want = sorted(tuple(r) for r in contour.segments_exprs(holey, LEVELS).collect())
-    got = sorted(
-        tuple(r) for r in contour.segments_blocked(holey, LEVELS, block=16).collect()
+    hole = "(row * 31 + col * 17) % 13 <> 0"
+    holey = cells.filter(hole)
+    grid_sql = f"SELECT * FROM ({synth.grid_duckdb_sql(SPEC, value='dem')}) WHERE {hole}"
+    want = sorted(
+        tuple(r)
+        for r in duckdb.sql(contour.segments_duckdb_sql(grid_sql, LEVELS)).fetchall()
     )
+    monkeypatch.setattr(contour, "_SEG_BLOCK", 16)
+    got = sorted(tuple(r) for r in contour.segments(holey, LEVELS).collect())
     assert got == want and 0 < len(got) < len(seg_rows)
 
 
@@ -217,21 +209,9 @@ def test_saddle_cells_resolved_by_center_rule(spark):
     assert got == orc
 
 
-def test_banded_variant_identical(spark, seg_rows):
-    """segments_banded (shuffle-byte-lean plan for network-bound clusters)
-    must emit the identical row multiset, including across band-boundary
-    halos and a band width that doesn't divide the grid."""
-    cells = synth.grid_df(spark, SPEC, value="dem")
-    for bw in (16, 64, SPEC.n_cols + 5):
-        got = sorted(
-            tuple(r) for r in contour.segments_banded(cells, LEVELS, band_w=bw).collect()
-        )
-        assert got == seg_rows, bw
-
-
 def test_topology_matches_union_find(spark, seg_rows):
     """Curve assembly: per-level component counts from the distributed
-    pointer-doubling CC must equal a scalar union-find over the same
+    banded CC must equal a scalar union-find over the same
     segments; chains/loops bookkeeping must satisfy the degree-<=2
     structure of grid level sets (n_chains = V - E, n_odd = 2*n_chains)."""
     cells = synth.grid_df(spark, SPEC, value="dem")
@@ -316,15 +296,56 @@ def test_contour_from_stored_zarr_source(spark, tmp_path, seg_rows):
     assert got == seg_rows
 
 
+def _shifted_dem(spark):
+    """The test DEM translated by 2000 rows and columns: its contour
+    coordinates pass the 2^30 micro-cell packing bound."""
+    return synth.grid_df(spark, SPEC, value="dem").select(
+        (F.col("row") + 2000).alias("row"), (F.col("col") + 2000).alias("col"), "z"
+    )
+
+
 def test_topology_wide_string_keys_identical(spark):
-    """wide=True swaps the packed-long vertex ids for 'lev:x:y' strings
-    (no grid-size bound); component counts must be identical."""
+    """Past the 2^30 packing bound the vertex ids become 'lev:x:y' strings
+    (no grid-size bound). Every topology column is translation-invariant,
+    so the shifted DEM (string ids) must report exactly what the unshifted
+    one (packed ids) does."""
     levels = [-0.5, 1999.5]
-    cells = synth.grid_df(spark, SPEC, value="dem")
-    segs = contour.segments(cells, levels)
+    segs = contour.segments(synth.grid_df(spark, SPEC, value="dem"), levels)
+    shifted = contour.segments(_shifted_dem(spark), levels)
+    assert contour._vertex_ids(segs, levels)[1] == "long"
+    assert contour._vertex_ids(shifted, levels)[1] == "string"
     a = sorted(tuple(r) for r in contour.topology(segs, levels).collect())
-    b = sorted(tuple(r) for r in contour.topology(segs, levels, wide=True).collect())
+    b = sorted(tuple(r) for r in contour.topology(shifted, levels).collect())
     assert a == b and a
+
+
+def _scalar_walk(edges):
+    """Reference traversal of one curve's (a, b) vertex pairs: start at the
+    smallest odd-degree vertex (else the smallest vertex), step to the
+    smallest neighbour other than the vertex just left, close a loop
+    explicitly."""
+    adj: dict = {}
+    for a, b in edges:
+        adj.setdefault(a, []).append(b)
+        adj.setdefault(b, []).append(a)
+    odd = sorted(v for v, ns in adj.items() if len(ns) % 2 == 1)
+    start = odd[0] if odd else min(adj)
+    prev, cur, seq = None, start, []
+    for _ in range(len(edges) + 1):
+        seq.append(cur)
+        ns = sorted(n for n in adj[cur] if n != prev)
+        if not ns:
+            break
+        prev, cur = cur, ns[0]
+        if cur == start and len(seq) == len(edges):
+            seq.append(cur)
+            break
+    return seq
+
+
+def _walked_pairs(seq):
+    """Undirected segments a vertex sequence steps along, sorted."""
+    return sorted((min(a, b), max(a, b)) for a, b in zip(seq, seq[1:]))
 
 
 def test_polylines_match_scalar_walk(spark, seg_rows):
@@ -365,26 +386,11 @@ def test_polylines_match_scalar_walk(spark, seg_rows):
         for a, b in edges:
             comps.setdefault(find(a), []).append((a, b))
         for comp_edges in comps.values():
-            adj: dict = {}
-            for a, b in comp_edges:
-                adj.setdefault(a, []).append(b)
-                adj.setdefault(b, []).append(a)
-            odd = sorted(v for v, ns in adj.items() if len(ns) % 2 == 1)
-            start = odd[0] if odd else min(adj)
-            prev, cur, seq = None, start, []
-            for _ in range(len(comp_edges) + 1):
-                seq.append(cur)
-                ns = sorted(n for n in adj[cur] if n != prev)
-                if not ns:
-                    break
-                prev, cur = cur, ns[0]
-                if cur == start and len(seq) == len(comp_edges):
-                    seq.append(cur)
-                    break
             # comp id = min packed vertex id (what dedup_clusters labels)
             li = [abs(l) for l in range(len(LEVELS)) if int(LEVELS[l] * 1000) == lev_milli][0]
-            key = (lev_milli, min((x * (1 << 30) + y) * 8 + li for x, y in adj))
-            assert got[key] == seq, key
+            verts = {v for e in comp_edges for v in e}
+            key = (lev_milli, min((x * (1 << 30) + y) * 8 + li for x, y in verts))
+            assert got[key] == _scalar_walk(comp_edges), key
             n_checked += 1
     assert n_checked == len(got) and n_checked > 0
 
@@ -404,10 +410,39 @@ def test_polylines_segments_consumed_once(spark):
         pl.setdefault(r["comp"], []).append((r["seq"], r["x"], r["y"]))
     walked = []
     for comp, rows in pl.items():
-        vs = [(x, y) for _, x, y in sorted(rows)]
-        for a, b in zip(vs, vs[1:]):
-            walked.append((min(a, b), max(a, b)))
+        walked += _walked_pairs([(x, y) for _, x, y in sorted(rows)])
     assert sorted(walked) == seg_set
+
+
+def test_polylines_walk_past_degree_two(spark):
+    """A hand-built soup whose vertices reach degree 4, with repeated
+    segments. Curve 1 is a square loop plus a doubled edge meeting at a
+    degree-4 vertex (a figure-eight whose second lobe is the doubled
+    edge); the walk consumes each of its segments exactly once. Curve 2
+    is a figure-eight of two squares: at a junction with four distinct
+    neighbours the smallest-neighbour rule re-enters the first lobe, so
+    only equality with the reference walk holds there."""
+    def v(x, y):
+        return (x * 1_000_000, y * 1_000_000)
+
+    o, p = v(1, 1), v(0, 0)
+    curve1 = [(o, v(1, 2)), (v(1, 2), v(2, 2)), (v(2, 2), v(2, 1)), (v(2, 1), o), (o, p), (p, o)]
+    j = v(11, 11)
+    curve2 = [
+        (j, v(10, 11)), (v(10, 11), v(10, 10)), (v(10, 10), v(11, 10)), (v(11, 10), j),
+        (j, v(12, 11)), (v(12, 11), v(12, 12)), (v(12, 12), v(11, 12)), (v(11, 12), j),
+    ]
+    rows = [(500, 0, 0, a[0], a[1], b[0], b[1]) for a, b in curve1 + curve2]
+    segs = spark.createDataFrame(
+        rows, "lev_milli long, r long, c long, x1 long, y1 long, x2 long, y2 long"
+    )
+    got: dict = {}
+    for r in contour.polylines(segs, [0.5]).collect():
+        got.setdefault(r["comp"], []).append((r["seq"], r["x"], r["y"]))
+    walks = sorted([(x, y) for _, x, y in sorted(pts)] for pts in got.values())
+    assert walks == sorted([_scalar_walk(curve1), _scalar_walk(curve2)])
+    w1 = next(w for w in walks if p in w)
+    assert _walked_pairs(w1) == sorted((min(a, b), max(a, b)) for a, b in curve1)
 
 
 def test_simplify_douglas_peucker(spark):
@@ -493,10 +528,7 @@ def test_polylines_wide_grid_string_comps(spark):
     segment exactly once, produce one curve per connected component, and
     flow the string label through simplify."""
     levels = [999.5]
-    shifted = synth.grid_df(spark, SPEC, value="dem").select(
-        (F.col("row") + 2000).alias("row"), (F.col("col") + 2000).alias("col"), "z"
-    )
-    segs = contour.segments(shifted, levels)
+    segs = contour.segments(_shifted_dem(spark), levels)
     pl = contour.polylines(segs, levels)
     assert dict(pl.dtypes)["comp"] == "string"
     by_comp: dict = {}
@@ -510,12 +542,10 @@ def test_polylines_wide_grid_string_comps(spark):
     )
     walked = []
     for rows in by_comp.values():
-        vs = [(x, y) for _, x, y in sorted(rows)]
-        for a, b in zip(vs, vs[1:]):
-            walked.append((min(a, b), max(a, b)))
+        walked += _walked_pairs([(x, y) for _, x, y in sorted(rows)])
     assert sorted(walked) == seg_set
     # one curve per component (wide topology agrees)
-    topo = contour.topology(segs, levels, wide=True).collect()
+    topo = contour.topology(segs, levels).collect()
     assert len(by_comp) == sum(r["n_components"] for r in topo)
     sp = contour.simplify(pl, 2_000_000.0)
     assert dict(sp.dtypes)["comp"] == "string"

@@ -8,6 +8,8 @@ from __future__ import annotations
 import glob
 import os
 
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from gridfour_spark.hypertable import RollupStore, minute_aggregate, rollup_level
@@ -104,3 +106,18 @@ def test_rollup_levels_read_the_aggregate(spark, tmp_path):
     assert os.path.basename(store.path) in plan
     hour = rollup_level(store.minute(), "hour")
     assert _sorted_rows(hour) == _sorted_rows(store.rollup("hour"))
+
+
+def _persistent_rdd_ids(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_refresh_failure_releases_delta_cache(spark, tmp_path):
+    """refresh on a store whose path was never written fails reading the
+    stored minute level, after the delta aggregate is cached; the cache
+    must be released on that exception path too."""
+    store = RollupStore(spark, str(tmp_path / "never_written"))
+    before = _persistent_rdd_ids(spark)
+    with pytest.raises(AnalysisException):
+        store.refresh(_events(spark))
+    assert _persistent_rdd_ids(spark) == before

@@ -4,12 +4,16 @@ Runs each __spark_entry__.queries() entry on Spark and its oracle_sql() twin
 on DuckDB at the given SF dir, compares row count, column names, and an
 order-insensitive value hash (rows sorted by all columns, floats rounded).
 
+A query whose input is absent on this machine is reported as SKIP with
+the reason, counted on the final line, and never counted as OK.
+
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
@@ -47,9 +51,19 @@ def main() -> None:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
 
     qs, os_ = e.queries(), e.oracle_sql()
-    failures = []
+    # queries that read the reference's sample files, which may be absent
+    skip_reasons = {}
+    if not os.path.isdir(e._GVRS_SAMPLES_DIR):
+        skip_reasons["gvrs_sample_read"] = (
+            f"reference sample directory {e._GVRS_SAMPLES_DIR} does not exist"
+        )
+    failures, skipped, n_ok = [], [], 0
     for name, fn in qs.items():
         if only and name not in only:
+            continue
+        if name in skip_reasons:
+            print(f"{name:24s} SKIP {skip_reasons[name]}")
+            skipped.append(name)
             continue
         t0 = time.time()
         try:
@@ -96,11 +110,14 @@ def main() -> None:
             else:
                 print("   spark cols:", list(spdf.columns))
                 print("   duck  cols:", list(ddf.columns))
+        else:
+            n_ok += 1
     spark.stop()
+    tally = f"{n_ok} OK, {len(failures)} FAIL, {len(skipped)} skipped {skipped}"
     if failures:
-        print("FAILURES:", failures)
+        print("FAILURES:", failures, f"({tally})")
         sys.exit(1)
-    print("ALL OK")
+    print(f"ALL OK ({tally})")
 
 
 if __name__ == "__main__":
