@@ -512,7 +512,8 @@ def main() -> None:
     contour_cells_per_sec = round(_GG.n_rows * _GG.n_cols * 5 / contour_sec, 1)
     contour_n_segments = int(_crow["n"])
 
-    # polyline assembly (distributed CC + per-curve Arrow walks) and
+    # polyline assembly (one task labels and walks every curve below the
+    # CC cap; banded CC + per-curve Arrow walks above it) and
     # Douglas-Peucker simplification at a 2-cell tolerance
     _cseg = _cseg.persist()
     _cseg.count()

@@ -45,14 +45,6 @@ _REPEAT_ZERO_7BITS = 18   # 7 extra bits, repeat zero 11..138 times
 _SYMBOL_SET_SIZE = 19
 
 
-def _get_bits(bits: np.ndarray, pos: int, n: int) -> int:
-    """Little-endian composition of n sequential bits (BitInputStore.getBits)."""
-    v = 0
-    for i in range(n):
-        v |= int(bits[pos + i]) << i
-    return v
-
-
 class _CanonTables:
     """First-code/offset canonical decode tables from a code-length array.
 

@@ -24,7 +24,8 @@ Both directions are fully vectorized. Encoding scatters with cumsum offsets;
 decoding (the RecordManager.readTile:492-515 hot path) recovers symbol starts
 with pointer-doubling list ranking (_orbit) and reconstructs the predictors
 with double-cumulative-sum closed forms (every predictor recurrence is linear
-mod 2^32). The original per-symbol walks are kept as *_scalar test oracles.
+mod 2^32). The streaming M32 walk (m32_decode_scalar) is kept as the test
+oracle of the vectorized M32 decode.
 """
 
 from __future__ import annotations
@@ -229,26 +230,6 @@ def _wrap32_i64(a: np.ndarray) -> np.ndarray:
     return ((a + 2**31) % 2**32) - 2**31
 
 
-def _unpredict_linear_scalar(seed: int, syms: np.ndarray, nr: int, nc: int) -> np.ndarray:
-    """Op-for-op scalar decode (test oracle for the cumsum form below)."""
-    v = np.zeros((nr, nc), dtype=np.int64)
-    v[0, 0] = seed
-    k = 0
-    v[0, 1] = v[0, 0] + syms[k]; k += 1
-    for r in range(1, nr):
-        v[r, 0] = v[r - 1, 0] + syms[k]; k += 1
-        v[r, 1] = v[r, 0] + syms[k]; k += 1
-    for r in range(nr):
-        a, b = v[r, 0], v[r, 1]
-        for c in range(2, nc):
-            pred = ((2 * b - a + 2**31) % 2**32) - 2**31
-            cc = ((pred + syms[k] + 2**31) % 2**32) - 2**31
-            k += 1
-            v[r, c] = cc
-            a, b = b, cc
-    return ((v + 2**31) % 2**32 - 2**31).astype(np.int32)
-
-
 def _unpredict_linear(seed: int, syms: np.ndarray, nr: int, nc: int) -> np.ndarray:
     """Vectorized second-order decode: pred = 2b - a means the first
     difference E[c] = v[c] - v[c-1] satisfies E[c] = E[c-1] + s[c], so the
@@ -268,23 +249,6 @@ def _unpredict_linear(seed: int, syms: np.ndarray, nr: int, nc: int) -> np.ndarr
         e = _wrap32_i64(e1[:, None] + np.cumsum(interior, axis=1))
         v[:, 2:] = v[:, 1:2] + np.cumsum(e, axis=1)
     return _wrap32_i64(v).astype(np.int32)
-
-
-def _unpredict_triangle_scalar(seed: int, syms: np.ndarray, nr: int, nc: int) -> np.ndarray:
-    """Op-for-op scalar decode (test oracle for the cumsum form below)."""
-    v = np.zeros((nr, nc), dtype=np.int64)
-    v[0, 0] = seed
-    k = 0
-    for c in range(1, nc):
-        v[0, c] = v[0, c - 1] + syms[k]; k += 1
-    for r in range(1, nr):
-        v[r, 0] = v[r - 1, 0] + syms[k]; k += 1
-    for r in range(1, nr):
-        for c in range(1, nc):
-            pred = ((v[r - 1, c] + v[r, c - 1] - v[r - 1, c - 1] + 2**31) % 2**32) - 2**31
-            v[r, c] = ((pred + syms[k] + 2**31) % 2**32) - 2**31
-            k += 1
-    return ((v + 2**31) % 2**32 - 2**31).astype(np.int32)
 
 
 def _unpredict_triangle(seed: int, syms: np.ndarray, nr: int, nc: int) -> np.ndarray:

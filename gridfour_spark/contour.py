@@ -35,6 +35,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from gridfour_spark import graph
+
 # corner bit layout: 1 = z00 (top-left, r,c), 2 = z01 (top-right, r,c+1),
 # 4 = z11 (bottom-right, r+1,c+1), 8 = z10 (bottom-left, r+1,c)
 # edges: T between 00-01, R between 01-11, B between 10-11, L between 00-10
@@ -220,74 +222,40 @@ def _coord_stats(segs: DataFrame) -> tuple:
     return row["mx"], row["my"], row["n"]
 
 
-# target edges per CC band: one band's union-find must fit one executor
+# target edges per CC band: one band's CC kernel must fit one executor
 # task comfortably (~100k edges of 2 longs/strings); band COUNT therefore
 # scales with segment count (scale-adaptive, never a local-core constant)
 _CC_BAND_EDGES = 100_000
 
-# largest contracted (super) graph one executor task resolves directly;
-# above it the distributed pointer doubling takes over
-_CC_SUPER_LOCAL_MAX = 2_000_000
-
-
-def _uf_kernel(key, pdf):
-    """Union-find over one group's (_va, _vb) edges -> (node, rep) with
-    rep = the MIN node id of the local component (path-compressed; works
-    for packed longs and for the fixed-width lpad'ed string ids, whose
-    lexicographic order equals numeric order)."""
-    import pandas as pd
-
-    parent: dict = {}
-
-    def find(a):
-        root = a
-        while parent.get(root, root) != root:
-            root = parent[root]
-        while parent.get(a, a) != a:  # path compression
-            parent[a], a = root, parent[a]
-        return root
-
-    va = pdf["_va"].tolist()
-    vb = pdf["_vb"].tolist()
-    for a, b in zip(va, vb):
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            if rb < ra:
-                ra, rb = rb, ra
-            parent[rb] = ra
-    nodes = set(va)
-    nodes.update(vb)
-    nodes = list(nodes)
-    return pd.DataFrame({"node": nodes, "rep": [find(x) for x in nodes]})
-
 
 def _cc_segments(e: DataFrame, mx: int, n_edges: int, id_type: str) -> DataFrame:
-    """Connected components of a SEGMENT graph (round 8): banded two-level
-    CC exploiting the spatial locality generic pointer doubling cannot see.
+    """Connected components of a SEGMENT graph -> (node, comp), comp = the
+    min vertex id of the curve (the label textops.dedup_clusters gives).
 
-    Contour vertices are grid-edge crossings: every edge joins two
-    vertices within one cell of each other, so grouping edges by an
-    x-coordinate band makes almost every chain band-internal. Phase 1 is
-    one applyInPandas union-find per band group (levels never cross-union:
-    the level index is packed inside every vertex id) — path-compressed,
-    min-id representatives, pure per-task state bounded by the band edge
-    target — which contracts each band's chains to their min-vertex reps
-    and emits (node, rep) links. Phase 2 runs textops.dedup_clusters'
-    pointer doubling ONLY on the contracted rep graph (one rep-pair edge
-    per node that touches >= 2 bands — thousands of rows instead of the
-    full vertex set), so each doubling round is metadata-sized and the
-    round count is log(bands a curve crosses), not log(curve length).
-    Labels are unchanged by construction: a local rep is the min vertex of
-    its band-local component, the rep-graph minimum is therefore the min
-    vertex of the whole curve — the exact label dedup_clusters produces
-    (measured 31.6 s -> ~2 s on the 203k-segment global-DEM graph; pinned
-    equal in tests/test_contour.py).
+    Up to graph._CC_LOCAL_MAX_EDGES edges the whole graph is labelled by
+    graph.cc_kernel in ONE task. Above it, a banded two-level CC exploits
+    the spatial locality generic pointer doubling cannot see: contour
+    vertices are grid-edge crossings, so every edge joins two vertices
+    within one cell of each other and grouping edges by an x-coordinate
+    band makes almost every chain band-internal. Phase 1 runs cc_kernel per
+    band group (levels never cross-union: the level index is part of every
+    vertex id), contracting each band's chains to their min-vertex reps as
+    (node, rep) links. Phase 2 labels only the contracted rep graph (one
+    rep-pair edge per node that touches >= 2 bands — O(perimeter), not
+    O(area)): in one cc_kernel task up to the same cap, else by
+    dedup_clusters' pointer doubling, whose round count is then log(bands a
+    curve crosses), not log(curve length). A local rep is the min vertex of
+    its band-local component, so the rep-graph minimum is the min vertex of
+    the whole curve: both sides of the cap give the same labels (pinned in
+    tests/test_contour.py).
 
     e: (_va, _vb, x1) edge frame; mx/n_edges from _coord_stats; id_type =
     'long' (packed) or 'string' (wide lpad'ed ids, where lexicographic
     min == numeric min)."""
     from gridfour_spark.textops import _persist_tracked, dedup_clusters
 
+    if n_edges <= graph._CC_LOCAL_MAX_EDGES:
+        return graph.one_task_components(e).withColumnRenamed("rep", "comp")
     n_bands = max(32, (int(n_edges) + _CC_BAND_EDGES - 1) // _CC_BAND_EDGES)
     width = max(1, int(mx) // n_bands + 1)
 
@@ -295,10 +263,10 @@ def _cc_segments(e: DataFrame, mx: int, n_edges: int, id_type: str) -> DataFrame
         "_va", "_vb", (F.col("x1") / F.lit(width)).cast("long").alias("_band")
     )
     # persisted: per_node, the distinct-rep frame and the final label join
-    # all read links — without the persist the UF kernel would re-run per
+    # all read links — without the persist the CC kernel would re-run per
     # consumer (plan lineage, not data, is what DataFrames share)
     links = _persist_tracked(
-        banded.groupBy("_band").applyInPandas(_uf_kernel, f"node {id_type}, rep {id_type}")
+        banded.groupBy("_band").applyInPandas(graph.cc_kernel, f"node {id_type}, rep {id_type}")
     )
     # one rep-pair edge per node spanning >=2 bands; nodes interior to one
     # band contribute nothing to the contracted graph
@@ -314,20 +282,11 @@ def _cc_segments(e: DataFrame, mx: int, n_edges: int, id_type: str) -> DataFrame
     if n_super == 0:
         rep_label = reps.select("rep", F.col("rep").alias("_lbl"))
     else:
-        if n_super <= _CC_SUPER_LOCAL_MAX:
-            # the contracted graph is metadata-sized (one edge per band-
-            # spanning node — O(perimeter), not O(area)): one executor
-            # union-find task resolves it in a single job instead of
-            # O(log diameter) doubling rounds of ~6 jobs each
-            comp2 = (
-                super_edges.withColumn("_g", F.lit(0))
-                .groupBy("_g")
-                .applyInPandas(_uf_kernel, f"node {id_type}, rep {id_type}")
-                .select(F.col("node").alias("rep"), F.col("rep").alias("_lbl"))
+        if n_super <= graph._CC_LOCAL_MAX_EDGES:
+            comp2 = graph.one_task_components(super_edges).select(
+                F.col("node").alias("rep"), F.col("rep").alias("_lbl")
             )
         else:
-            # pathological contraction ratio: fall back to the O(log D)
-            # distributed doubling (same labels, bounded memory per task)
             comp2 = dedup_clusters(
                 super_edges.select(
                     F.col("_va").alias("doc_a"), F.col("_vb").alias("doc_b")
@@ -349,12 +308,13 @@ def _cc_segments(e: DataFrame, mx: int, n_edges: int, id_type: str) -> DataFrame
 def _vertex_ids(segs: DataFrame, levels: list[float]) -> tuple:
     """The one vertex-id rule of `topology` and `polylines`.
 
-    Returns (s, id_type, mx, n_edges): `segs` plus its level index `_li`
-    and the endpoint ids `_va` (x1, y1) and `_vb` (x2, y2); mx and n_edges
-    come from the same `_coord_stats` agg and size the CC bands. Ids are
-    packed longs ((x_u << 30) | y_u) << 3 | lev_idx while every coordinate
-    is < 2^30 (grids up to ~1073 x 1073 cells) and there are at most 8
-    levels. Otherwise they are 'lev:x:y' STRINGS with lpad'ed coordinates,
+    Returns (s, id_type, mx, n_edges, enc): `segs` plus its level index
+    `_li` and the endpoint ids `_va` (x1, y1) and `_vb` (x2, y2); mx and
+    n_edges come from the same `_coord_stats` agg and pick and size the CC
+    path; enc(x, y) is the id expression of coordinate columns x, y at
+    level `_li`. Ids are packed longs ((x_u << 30) | y_u) << 3 | lev_idx
+    while every coordinate is < 2^30 (grids up to ~1073 x 1073 cells) and
+    there are at most 8 levels. Otherwise they are 'lev:x:y' STRINGS with lpad'ed coordinates,
     whose lexicographic order equals numeric order: past 2^30 the packed
     multiply wraps mod 2^64 and, because *8 is not injective there,
     vertices exactly 2^31 apart in x would COLLIDE; a 9th level would
@@ -385,7 +345,7 @@ def _vertex_ids(segs: DataFrame, levels: list[float]) -> tuple:
             )
 
     s = s.withColumn("_va", enc("x1", "y1")).withColumn("_vb", enc("x2", "y2"))
-    return s, id_type, mx or 0, n_edges
+    return s, id_type, mx or 0, n_edges, enc
 
 
 def topology(segs: DataFrame, levels: list[float]) -> DataFrame:
@@ -396,13 +356,12 @@ def topology(segs: DataFrame, levels: list[float]) -> DataFrame:
     Level sets of a grid function are disjoint closed loops plus chains
     that end on the grid boundary, so n_odd counts chain endpoints (all on
     the boundary — tests assert it) and n_components counts curves. The
-    CC is `_cc_segments`' banded union-find (one union-find task per
-    x band, then one over the contracted band-crossing graph). Vertex ids
-    follow `_vertex_ids`: packed longs on small grids, 'lev:x:y' strings
-    beyond 2^30 micro-cells or 8 levels — the choice comes from the
-    measured coordinates and the level count, and the counts are the same
-    either way (pytest pins both equal)."""
-    s, id_type, mx, n_edges = _vertex_ids(segs, levels)
+    CC is `_cc_segments`: one graph.cc_kernel task up to the one CC cap,
+    banded above it. Vertex ids follow `_vertex_ids`: packed longs on small
+    grids, 'lev:x:y' strings beyond 2^30 micro-cells or 8 levels — the
+    choice comes from the measured coordinates and the level count, and the
+    counts are the same either way (pytest pins both equal)."""
+    s, id_type, mx, n_edges, _ = _vertex_ids(segs, levels)
     comp = _cc_segments(s.select("_va", "_vb", "x1"), mx, n_edges, id_type)
     node = F.col("node")
     lev_of = node % 8 if id_type == "long" else F.split(node, ":").getItem(0)
@@ -428,89 +387,123 @@ def polylines(segs: DataFrame, levels: list[float]) -> DataFrame:
     """Ordered polyline assembly: the cartographic contour product.
 
     Returns (lev_milli, comp, seq, x, y) — for every curve, its vertices
-    in traversal order. Curves are identified DISTRIBUTED (the same
-    banded CC as `topology`; comp = the min vertex id of
-    the curve); each curve then assembles inside ONE Arrow group task
-    (`applyInPandas` over comp): inter-curve parallelism is the scale
-    axis — a 100 TB DEM has millions of short curves, not one long one —
-    while the intra-curve walk is a linear scalar pass over that curve's
-    own segments (the per-chunk-kernel shape of zarrv2.update_zarr; a
-    pathological single curve longer than executor memory would need
-    parallel list ranking over darts — O(log L) pointer-jumping rounds —
-    noted here as the escalation path, not built).
+    in traversal order, comp = the min vertex id of the curve. One kernel,
+    `_walk_curves`, labels curves with graph.min_labels and walks them.
+    Up to graph._CC_LOCAL_MAX_EDGES segments (the same cap as every CC
+    call site) all segments go to ONE Arrow group task and the kernel does
+    the whole job in a single pass: no CC jobs, no label join. Above the
+    cap, curves are identified DISTRIBUTED by `_cc_segments` (banded CC)
+    and the kernel runs per curve (`applyInPandas` over comp):
+    inter-curve parallelism is the scale axis — a 100 TB DEM has millions
+    of short curves, not one long one — while the intra-curve walk is a
+    linear scalar pass over that curve's own segments. A pathological
+    single curve longer than executor memory would need parallel list
+    ranking over darts — O(log L) pointer-jumping rounds — noted here as
+    the escalation path, not built.
 
     Deterministic traversal: chains start at their smallest odd-degree
     (boundary) vertex; closed loops at their smallest vertex. Each step
     moves to the smallest neighbour other than the vertex just left, for
     any degree and with repeated segments. Output vertex coords are the
     quantized segment endpoints, so the frame is exact and hash-comparable
-    (tests pin it against a scalar walk). comp is a packed long or a
-    'lev:x:y' string as `_vertex_ids` decides — the walk itself always
-    uses raw coordinates, so only the curve LABEL changes form."""
-    s, comp_type, mx, n_edges = _vertex_ids(segs, levels)
-    lab = _cc_segments(
-        s.select("_va", "_vb", "x1"), mx, n_edges, comp_type
-    ).withColumnRenamed("node", "_va")
-    # project the walk's inputs only — _vb never crosses the group shuffle
-    # (no broadcast hint: lab is O(vertices), which outgrows any broadcast
-    # budget at 100x scale; the planner picks from runtime sizes)
-    e = s.select("lev_milli", "x1", "y1", "x2", "y2", "_va").join(lab, "_va").drop("_va")
+    (tests pin it against a scalar walk). The kernel emits each curve's
+    smallest vertex and comp is `_vertex_ids`' own id expression of it — a
+    packed long or a 'lev:x:y' string — so only the curve LABEL changes
+    form; the walk itself always uses raw coordinates."""
+    s, comp_type, mx, n_edges, enc = _vertex_ids(segs, levels)
+    cols = ["lev_milli", "_li", "x1", "y1", "x2", "y2"]
+    if n_edges <= graph._CC_LOCAL_MAX_EDGES:
+        grouped = s.select(*cols, F.lit(0).alias("_g")).groupBy("_g")
+    else:
+        lab = _cc_segments(
+            s.select("_va", "_vb", "x1"), mx, n_edges, comp_type
+        ).withColumnRenamed("node", "_va")
+        # project the walk's inputs only — _vb never crosses the group
+        # shuffle (no broadcast hint: lab is O(vertices), which outgrows any
+        # broadcast budget at 100x scale; the planner picks from runtime
+        # sizes)
+        grouped = s.select(*cols, "_va").join(lab, "_va").drop("_va").groupBy("comp")
+    walked = grouped.applyInPandas(
+        _walk_curves, "lev_milli long, _li long, cx long, cy long, seq long, x long, y long"
+    )
+    return walked.select("lev_milli", enc("cx", "cy").alias("comp"), "seq", "x", "y")
 
-    def walk(key, pdf):
-        import numpy as np
-        import pandas as pd
 
-        L = len(pdf)
-        # vectorized vertex table + CSR neighbour lists: np.unique(axis=0)
-        # returns vertices in lexicographic (x, y) order, so integer vertex
-        # ids compare like the coordinate tuples; a lexsort of the directed
-        # darts lists each vertex's neighbours sorted in
-        # dst_s[first[v]:last[v]], repeats included.
-        pts_arr = np.stack(
-            [
-                np.concatenate([pdf["x1"].to_numpy(np.int64), pdf["x2"].to_numpy(np.int64)]),
-                np.concatenate([pdf["y1"].to_numpy(np.int64), pdf["y2"].to_numpy(np.int64)]),
-            ],
-            axis=1,
-        )
-        verts, inv = np.unique(pts_arr, axis=0, return_inverse=True)
-        inv = inv.ravel()
-        a, b = inv[:L], inv[L:]
-        ids = np.arange(len(verts))
-        src = np.concatenate([a, b])
-        dst = np.concatenate([b, a])
-        order = np.lexsort((dst, src))
-        src_s, dst_s = src[order], dst[order]
-        first = np.searchsorted(src_s, ids, side="left")
-        last = np.searchsorted(src_s, ids, side="right")
-        odd_ids = np.nonzero((last - first) % 2 == 1)[0]
-        start = int(odd_ids[0]) if len(odd_ids) else 0
-        nbr, fst, lst = dst_s.tolist(), first.tolist(), last.tolist()
-        prev, cur = -1, start
-        seq = []
-        for _ in range(L + 1):
+def _walk_curves(pdf):
+    """Label and walk every curve of one group's segments (lev_milli, _li,
+    x1, y1, x2, y2) -> (lev_milli, _li, cx, cy, seq, x, y), (_li, cx, cy)
+    = the curve's smallest vertex.
+
+    np.unique(axis=0) numbers the vertices in (_li, x, y) order; within a
+    curve the level is fixed, so integer vertex ids compare like the
+    coordinate tuples and graph.min_labels' label is the curve's smallest
+    vertex. A lexsort of the directed darts lists each vertex's neighbours
+    sorted in nbr[first[v]:first[v] + deg[v]], repeats included."""
+    import numpy as np
+    import pandas as pd
+
+    L = len(pdf)
+    col = lambda c: pdf[c].to_numpy(np.int64)  # noqa: E731
+    li = col("_li")
+    pts = np.stack(
+        [
+            np.concatenate([li, li]),
+            np.concatenate([col("x1"), col("x2")]),
+            np.concatenate([col("y1"), col("y2")]),
+        ],
+        axis=1,
+    )
+    verts, inv = np.unique(pts, axis=0, return_inverse=True)
+    inv = inv.ravel()
+    a, b = inv[:L], inv[L:]
+    nv = len(verts)
+    lab = graph.min_labels(a, b, nv)
+    src = np.concatenate([a, b])
+    dst = np.concatenate([b, a])
+    nbr = dst[np.lexsort((dst, src))]
+    deg = np.bincount(src, minlength=nv)
+    first = np.cumsum(deg) - deg
+    # per curve (indexed by its label): segment count, level, start vertex
+    # = smallest odd-degree vertex, else the smallest vertex (the label)
+    n_seg = np.bincount(lab[a], minlength=nv)
+    lev = np.zeros(nv, dtype=np.int64)
+    lev[lab[a]] = col("lev_milli")
+    start = np.arange(nv)
+    odd = np.nonzero(deg % 2 == 1)[0]
+    odd_curve, first_odd = np.unique(lab[odd], return_index=True)
+    start[odd_curve] = odd[first_odd]
+    curves = np.nonzero(lab == np.arange(nv))[0]
+
+    nbr, fst, end = nbr.tolist(), first.tolist(), (first + deg).tolist()
+    seq, lens = [], []
+    for c in curves.tolist():
+        n_c = int(n_seg[c])
+        s0 = cur = int(start[c])
+        prev, n0 = -1, len(seq)
+        for _ in range(n_c + 1):
             seq.append(cur)
-            k, end = fst[cur], lst[cur]
-            while k < end and nbr[k] == prev:
+            k, e = fst[cur], end[cur]
+            while k < e and nbr[k] == prev:
                 k += 1
-            if k == end:
+            if k == e:
                 break  # chain end: no neighbour but the one just left
             prev, cur = cur, nbr[k]
-            if cur == start and len(seq) == L:
+            if cur == s0 and len(seq) - n0 == n_c:
                 seq.append(cur)  # close the loop explicitly
                 break
-        seq = np.asarray(seq, dtype=np.int64)
-        return pd.DataFrame({
-            "lev_milli": pdf["lev_milli"].iloc[0],
-            "comp": key[0],
-            "seq": range(len(seq)),
-            "x": verts[seq, 0],
-            "y": verts[seq, 1],
-        })
-
-    return e.groupBy("comp").applyInPandas(
-        walk, f"lev_milli long, comp {comp_type}, seq long, x long, y long"
-    )
+        lens.append(len(seq) - n0)
+    seq = np.asarray(seq, dtype=np.int64)
+    lens = np.asarray(lens, dtype=np.int64)
+    of = np.repeat(curves, lens)
+    return pd.DataFrame({
+        "lev_milli": lev[of],
+        "_li": verts[of, 0],
+        "cx": verts[of, 1],
+        "cy": verts[of, 2],
+        "seq": np.arange(len(seq)) - np.repeat(np.cumsum(lens) - lens, lens),
+        "x": verts[seq, 1],
+        "y": verts[seq, 2],
+    })
 
 
 def simplify(lines: DataFrame, tol: float) -> DataFrame:

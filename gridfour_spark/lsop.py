@@ -191,40 +191,6 @@ _STENCIL = [
 ]
 
 
-def decode_lsop_scalar(payload: bytes, nr: int, nc: int) -> np.ndarray:
-    """Op-for-op scalar decode (test oracle for the wavefront decode)."""
-    seed, u, init, interior = _parse_lsop(payload, nr, nc)
-    v = np.zeros((nr, nc), dtype=np.int64)
-    v[0, 0] = seed
-    k = 0
-    v[0, 1:] = _wrap32(seed + np.cumsum(init[k : k + nc - 1])); k += nc - 1
-    v[1:, 0] = _wrap32(seed + np.cumsum(init[k : k + nr - 1])); k += nr - 1
-    row1 = init[k : k + nc - 1]; k += nc - 1
-    for c in range(1, nc):
-        pred = (v[1, c - 1] + v[0, c]) - v[0, c - 1]
-        v[1, c] = _wrap32(pred + row1[c - 1])
-    col1 = init[k : k + nr - 2]; k += nr - 2
-    last2 = init[k:].reshape(nr - 2, 2)
-
-    uf = u.astype(_F32)
-    it = 0
-    for r in range(2, nr):
-        pred = (v[r, 0] + v[r - 1, 1]) - v[r - 1, 0]
-        v[r, 1] = _wrap32(pred + col1[r - 2])
-        for c in range(2, nc - 2):
-            zf = np.array([v[r + dr, c + dc] for dr, dc in _STENCIL], dtype=_F32)
-            acc = _F32(uf[0] * zf[0])
-            for i in range(1, 12):
-                acc = _F32(acc + _F32(uf[i] * zf[i]))
-            est = int(np.floor(_F32(acc + _F32(0.5))))
-            v[r, c] = _wrap32(est + interior[it]); it += 1
-        pred = (v[r, nc - 3] + v[r - 1, nc - 2]) - v[r - 1, nc - 3]
-        v[r, nc - 2] = _wrap32(pred + last2[r - 2, 0])
-        pred = (v[r, nc - 2] + v[r - 1, nc - 1]) - v[r - 1, nc - 2]
-        v[r, nc - 1] = _wrap32(pred + last2[r - 2, 1])
-    return v.astype(np.int32)
-
-
 def _parse_lsop(payload: bytes, nr: int, nc: int):
     if payload[1] & 0x40:
         # revised header (canonical-Huffman residuals, LsHeader.java:66-73):

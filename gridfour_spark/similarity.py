@@ -121,13 +121,6 @@ def with_sign_bucket(emb: DataFrame, n_bits: int = 8) -> DataFrame:
     return emb.withColumn("bucket", b.cast("int"))
 
 
-def sign_bucket_sql(n_bits: int = 8, table: str = "embeddings") -> str:
-    terms = " + ".join(
-        f"CASE WHEN embedding[{j + 1}] > 0 THEN {1 << j} ELSE 0 END" for j in range(n_bits)
-    )
-    return f"SELECT *, CAST({terms} AS INTEGER) AS bucket FROM {table}"
-
-
 def ann_topk(emb: DataFrame, queries: DataFrame, k: int = 5, n_bits: int = 8) -> DataFrame:
     """Approximate top-k: multi-probe sign-bucket LSH.
 

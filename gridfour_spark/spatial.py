@@ -51,20 +51,6 @@ def synth_polygons(spark: SparkSession, n: int = 24) -> DataFrame:
     return spark.createDataFrame(rows, "poly_id int, xs array<double>, ys array<double>")
 
 
-def polygon_edges(polys: DataFrame) -> DataFrame:
-    """(poly_id, x1, y1, x2, y2) one row per edge, closing edge included."""
-    n = N_POLY_VERTS
-    e = polys.withColumn("i", F.explode(F.sequence(F.lit(0), F.lit(n - 1))))
-    nxt = (F.col("i") + 1) % n
-    return e.select(
-        "poly_id",
-        F.element_at("xs", F.col("i") + 1).alias("x1"),
-        F.element_at("ys", F.col("i") + 1).alias("y1"),
-        F.element_at("xs", nxt + 1).alias("x2"),
-        F.element_at("ys", nxt + 1).alias("y2"),
-    )
-
-
 def pip_join(
     points: DataFrame,
     polys: DataFrame,

@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from gridfour_spark import graph
+
 N_MINHASH = 8  # 2 bands x 4 rows (small-SF default; see lsh_params for scale)
 SHINGLE = 3
 
@@ -605,7 +607,9 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 64) -> DataFrame:
     cluster_size) with cluster_id = the MIN doc id reachable through the
     pair graph (the canonical representative a training pipeline keeps).
 
-    Distributed min-label propagation with POINTER DOUBLING **and
+    Up to graph._CC_LOCAL_MAX_EDGES symmetrized edges one graph.cc_kernel
+    task labels the whole graph. Above it: distributed min-label
+    propagation with POINTER DOUBLING **and
     shortcut-edge augmentation**: each round (a) every node takes the min
     label over itself and its neighbors (one edge join + partial-
     aggregated groupBy min), (b) labels jump to their label's label (one
@@ -629,104 +633,101 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 64) -> DataFrame:
     round's join tree twice) until Catalyst itself OOMs — lineage
     truncation per iteration is the standard Spark pattern for fixpoint
     algorithms, and on a real cluster it also caps the recovery cost of
-    a lost executor to one round."""
+    a lost executor to one round. The edge and initial-label caches are
+    released on return and when a step raises."""
     E = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    E = E.unionByName(
+    E = E0 = E.unionByName(
         E.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct().persist()
-    # round 8 (same shortcut as contour._cc_segments): a pair graph below
-    # the single-task cap resolves in ONE executor union-find task instead
-    # of O(log D) doubling rounds of ~5 jobs each — identical labels by
-    # construction (rep = min node of the component). The distributed
-    # doubling below remains the over-cap path.
-    n_edges = E.count()
-    if n_edges <= _CC_LOCAL_MAX_EDGES:
-        from gridfour_spark.contour import _uf_kernel
-
-        t = dict(E.dtypes)["src"]
-        lab = (
-            E.select(F.col("src").alias("_va"), F.col("dst").alias("_vb"))
-            .withColumn("_g", F.lit(0))
-            .groupBy("_g")
-            .applyInPandas(_uf_kernel, f"node {t}, rep {t}")
-        )
-        lab = _persist_tracked(lab)
-        lab.count()  # materialize before dropping E's cache (lab reads E)
-        sizes = lab.groupBy("rep").agg(F.count("*").alias("cluster_size"))
-        out = lab.join(sizes, "rep").select(
-            F.col("node").alias("doc_id"),
-            F.col("rep").alias("cluster_id"),
-            "cluster_size",
-        )
-        E.unpersist()
-        return out
-    # persist (not checkpoint) for the input frames: their lineage is one
-    # shot — only the ITERATION output needs truncation. (localCheckpoint
-    # directly over the LSH pipeline's plan also trips a Catalyst
-    # AttributeMap bug in Spark 4.1 — round-5 finding.)
-    L = (
-        E.select(F.col("src").alias("doc_id")).distinct()
-        .withColumn("label", F.col("doc_id"))
-        .persist()
-    )
-    E0 = E
-    converged = False
-    for _ in range(max_iters):
-        prop = E.join(L, E.src == L.doc_id).select(
-            F.col("dst").alias("doc_id"), "label"
-        )
-        newL = prop.unionByName(L.select("doc_id", "label")).groupBy("doc_id").agg(
-            F.min("label").alias("label")
-        )
-        # pointer doubling: label <- label(label)
-        newL = (
-            newL.alias("x")
-            .join(
-                newL.select(
-                    F.col("doc_id").alias("_lid"), F.col("label").alias("_ll")
-                ),
-                F.col("x.label") == F.col("_lid"),
-                "left",
+    L0 = None
+    try:
+        # a pair graph up to the one CC cap resolves in ONE executor task
+        # (graph.cc_kernel) instead of O(log D) doubling rounds of ~5 jobs
+        # each — identical labels by construction (rep = min node of the
+        # component). The distributed doubling below is the over-cap path.
+        if E.count() <= graph._CC_LOCAL_MAX_EDGES:
+            lab = _persist_tracked(graph.one_task_components(
+                E.select(F.col("src").alias("_va"), F.col("dst").alias("_vb"))
+            ))
+            try:
+                lab.count()  # materialize before dropping E's cache (lab reads E)
+            except BaseException:
+                lab.unpersist()
+                raise
+            sizes = lab.groupBy("rep").agg(F.count("*").alias("cluster_size"))
+            return lab.join(sizes, "rep").select(
+                F.col("node").alias("doc_id"),
+                F.col("rep").alias("cluster_id"),
+                "cluster_size",
             )
-            .select(
-                F.col("x.doc_id"),
-                F.coalesce(F.col("_ll"), F.col("x.label")).alias("label"),
+        # persist (not checkpoint) for the input frames: their lineage is one
+        # shot — only the ITERATION output needs truncation. (localCheckpoint
+        # directly over the LSH pipeline's plan also trips a Catalyst
+        # AttributeMap bug in Spark 4.1 — round-5 finding.)
+        L = L0 = (
+            E.select(F.col("src").alias("doc_id")).distinct()
+            .withColumn("label", F.col("doc_id"))
+            .persist()
+        )
+        converged = False
+        for _ in range(max_iters):
+            prop = E.join(L, E.src == L.doc_id).select(
+                F.col("dst").alias("doc_id"), "label"
             )
-            .localCheckpoint()
+            newL = prop.unionByName(L.select("doc_id", "label")).groupBy("doc_id").agg(
+                F.min("label").alias("label")
+            )
+            # pointer doubling: label <- label(label)
+            newL = (
+                newL.alias("x")
+                .join(
+                    newL.select(
+                        F.col("doc_id").alias("_lid"), F.col("label").alias("_ll")
+                    ),
+                    F.col("x.label") == F.col("_lid"),
+                    "left",
+                )
+                .select(
+                    F.col("x.doc_id"),
+                    F.coalesce(F.col("_ll"), F.col("x.label")).alias("label"),
+                )
+                .localCheckpoint()
+            )
+            changed = (
+                newL.alias("n")
+                .join(L.alias("o"), "doc_id")
+                .filter(F.col("n.label") != F.col("o.label"))
+                .count()
+            )
+            L = newL
+            if changed == 0:
+                converged = True
+                break
+            # shortcut augmentation: next round's neighborhoods include each
+            # node's current best-known representative, so min information
+            # travels the label links as well as the original edges
+            links = L.filter(F.col("doc_id") != F.col("label")).select(
+                F.col("doc_id").alias("src"), F.col("label").alias("dst")
+            )
+            E = (
+                E.unionByName(links)
+                .unionByName(links.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+                .distinct()
+                .localCheckpoint()
+            )
+        if not converged:
+            raise RuntimeError(
+                f"dedup_clusters: no fixpoint after {max_iters} rounds — "
+                "component diameter exceeds 2^rounds, raise max_iters"
+            )
+        sizes = L.groupBy("label").agg(F.count("*").alias("cluster_size"))
+        return L.join(sizes, "label").select(
+            "doc_id", F.col("label").alias("cluster_id"), "cluster_size"
         )
-        changed = (
-            newL.alias("n")
-            .join(L.alias("o"), "doc_id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        L = newL
-        if changed == 0:
-            converged = True
-            break
-        # shortcut augmentation: next round's neighborhoods include each
-        # node's current best-known representative, so min information
-        # travels the label links as well as the original edges
-        links = L.filter(F.col("doc_id") != F.col("label")).select(
-            F.col("doc_id").alias("src"), F.col("label").alias("dst")
-        )
-        E = (
-            E.unionByName(links)
-            .unionByName(links.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-            .distinct()
-            .localCheckpoint()
-        )
-    if not converged:
-        raise RuntimeError(
-            f"dedup_clusters: no fixpoint after {max_iters} rounds — "
-            "component diameter exceeds 2^rounds, raise max_iters"
-        )
-    sizes = L.groupBy("label").agg(F.count("*").alias("cluster_size"))
-    out = L.join(sizes, "label").select(
-        "doc_id", F.col("label").alias("cluster_id"), "cluster_size"
-    )
-    E0.unpersist()
-    return out
+    finally:
+        E0.unpersist()
+        if L0 is not None:
+            L0.unpersist()
 
 
 def dedup_clusters_sql(jaccard_threshold: float = 0.3, docs_src: str = "documents") -> str:
@@ -981,11 +982,6 @@ _BPE_CKPT_EVERY = 8
 # -> ~100 MB at the cap, well inside the 8 GiB driver); bigger
 # vocabularies take the distributed per-round loop
 _BPE_DRIVER_MAX_TYPES = 2_000_000
-
-# largest symmetrized pair-graph one executor union-find task resolves
-# directly (mirrors contour._CC_SUPER_LOCAL_MAX); beyond it the
-# distributed pointer doubling takes over
-_CC_LOCAL_MAX_EDGES = 2_000_000
 
 
 def bpe_doc_token_counts(docs: DataFrame, final_state: DataFrame) -> DataFrame:

@@ -15,7 +15,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from gridfour_spark import contour, synth
+from gridfour_spark import contour, graph, synth
 from gridfour_spark.spec import GridSpec
 
 SPEC = GridSpec(n_rows=60, n_cols=70, n_rows_in_tile=20, n_cols_in_tile=35)
@@ -69,6 +69,17 @@ def _scalar_segments(spec: GridSpec, levels: list[float]):
                         )
                     )
     return sorted(out)
+
+
+def _both_caps(monkeypatch):
+    """Run the loop body on both sides of the one CC cap: the default (the
+    whole segment graph in one numpy task) and 0 (banded CC, distributed
+    pointer doubling, per-curve walk tasks)."""
+    default = graph._CC_LOCAL_MAX_EDGES
+    for cap in (default, 0):
+        monkeypatch.setattr(graph, "_CC_LOCAL_MAX_EDGES", cap)
+        yield cap
+    monkeypatch.setattr(graph, "_CC_LOCAL_MAX_EDGES", default)
 
 
 @pytest.fixture(scope="module")
@@ -209,16 +220,19 @@ def test_saddle_cells_resolved_by_center_rule(spark):
     assert got == orc
 
 
-def test_topology_matches_union_find(spark, seg_rows):
-    """Curve assembly: per-level component counts from the distributed
-    banded CC must equal a scalar union-find over the same
+def test_topology_matches_union_find(spark, seg_rows, monkeypatch):
+    """Curve assembly: per-level component counts from the CC, on both
+    sides of the one CC cap, must equal a scalar union-find over the same
     segments; chains/loops bookkeeping must satisfy the degree-<=2
     structure of grid level sets (n_chains = V - E, n_odd = 2*n_chains)."""
     cells = synth.grid_df(spark, SPEC, value="dem")
-    topo = sorted(
-        tuple(r)
-        for r in contour.topology(contour.segments(cells, LEVELS), LEVELS).collect()
-    )
+    segs = contour.segments(cells, LEVELS)
+    topos = [
+        sorted(tuple(r) for r in contour.topology(segs, LEVELS).collect())
+        for _ in _both_caps(monkeypatch)
+    ]
+    assert topos[0] == topos[1]
+    topo = topos[0]
 
     parent: dict = {}
 
@@ -348,18 +362,24 @@ def _walked_pairs(seq):
     return sorted((min(a, b), max(a, b)) for a, b in zip(seq, seq[1:]))
 
 
-def test_polylines_match_scalar_walk(spark, seg_rows):
-    """Ordered polyline assembly: every curve's vertex sequence must equal
-    a scalar traversal with the same deterministic start rule, consume
-    each segment exactly once, and close loops explicitly."""
-    cells = synth.grid_df(spark, SPEC, value="dem")
-    segs = contour.segments(cells, LEVELS)
-    pl = contour.polylines(segs, LEVELS)
+def _curves(pl) -> dict:
+    """{(lev_milli, comp): [(x, y), ...] in seq order} of a polylines frame."""
     got: dict = {}
     for r in pl.collect():
         got.setdefault((r["lev_milli"], r["comp"]), []).append((r["seq"], r["x"], r["y"]))
-    for k in got:
-        got[k] = [(x, y) for _, x, y in sorted(got[k])]
+    return {k: [(x, y) for _, x, y in sorted(v)] for k, v in got.items()}
+
+
+def test_polylines_match_scalar_walk(spark, seg_rows, monkeypatch):
+    """Ordered polyline assembly, on both sides of the one CC cap: every
+    curve's vertex sequence must equal a scalar traversal with the same
+    deterministic start rule, consume each segment exactly once, and close
+    loops explicitly."""
+    cells = synth.grid_df(spark, SPEC, value="dem")
+    segs = contour.segments(cells, LEVELS)
+    both = [_curves(contour.polylines(segs, LEVELS)) for _ in _both_caps(monkeypatch)]
+    assert both[0] == both[1]
+    got = both[0]
 
     # scalar: same CC + walk
     by_level: dict = {}
@@ -414,14 +434,29 @@ def test_polylines_segments_consumed_once(spark):
     assert sorted(walked) == seg_set
 
 
-def test_polylines_walk_past_degree_two(spark):
+def test_polylines_below_cap_runs_no_cc_segments(spark, monkeypatch):
+    """Below the one CC cap polylines labels and walks every curve in one
+    task: it never reaches the distributed CC."""
+    def no_cc(*args):
+        raise AssertionError("_cc_segments called below the cap")
+
+    monkeypatch.setattr(contour, "_cc_segments", no_cc)
+    levels = [1999.5]
+    segs = contour.segments(synth.grid_df(spark, SPEC, value="dem"), levels)
+    assert contour.polylines(segs, levels).count() > segs.count()
+
+
+def test_polylines_walk_past_degree_two(spark, monkeypatch):
     """A hand-built soup whose vertices reach degree 4, with repeated
     segments. Curve 1 is a square loop plus a doubled edge meeting at a
     degree-4 vertex (a figure-eight whose second lobe is the doubled
     edge); the walk consumes each of its segments exactly once. Curve 2
     is a figure-eight of two squares: at a junction with four distinct
     neighbours the smallest-neighbour rule re-enters the first lobe, so
-    only equality with the reference walk holds there."""
+    only equality with the reference walk holds there. Curve 3 is an open
+    chain whose smallest vertex is interior, so the walk must start at its
+    smallest odd-degree end to cover it. Both sides of the one CC cap walk
+    alike."""
     def v(x, y):
         return (x * 1_000_000, y * 1_000_000)
 
@@ -432,15 +467,16 @@ def test_polylines_walk_past_degree_two(spark):
         (j, v(10, 11)), (v(10, 11), v(10, 10)), (v(10, 10), v(11, 10)), (v(11, 10), j),
         (j, v(12, 11)), (v(12, 11), v(12, 12)), (v(12, 12), v(11, 12)), (v(11, 12), j),
     ]
-    rows = [(500, 0, 0, a[0], a[1], b[0], b[1]) for a, b in curve1 + curve2]
+    curve3 = [(v(22, 22), v(20, 20)), (v(20, 20), v(21, 23))]
+    rows = [(500, 0, 0, a[0], a[1], b[0], b[1]) for a, b in curve1 + curve2 + curve3]
     segs = spark.createDataFrame(
         rows, "lev_milli long, r long, c long, x1 long, y1 long, x2 long, y2 long"
     )
-    got: dict = {}
-    for r in contour.polylines(segs, [0.5]).collect():
-        got.setdefault(r["comp"], []).append((r["seq"], r["x"], r["y"]))
-    walks = sorted([(x, y) for _, x, y in sorted(pts)] for pts in got.values())
-    assert walks == sorted([_scalar_walk(curve1), _scalar_walk(curve2)])
+    both = [_curves(contour.polylines(segs, [0.5])) for _ in _both_caps(monkeypatch)]
+    assert both[0] == both[1]
+    walks = sorted(both[0].values())
+    assert walks == sorted([_scalar_walk(curve1), _scalar_walk(curve2), _scalar_walk(curve3)])
+    assert [v(21, 23), v(20, 20), v(22, 22)] in walks
     w1 = next(w for w in walks if p in w)
     assert _walked_pairs(w1) == sorted((min(a, b), max(a, b)) for a, b in curve1)
 
@@ -520,20 +556,21 @@ def _dist_point_seg(p, a, b):
     return _m.hypot(px - (ax + t * dx), py - (ay + t * dy))
 
 
-def test_polylines_wide_grid_string_comps(spark):
+def test_polylines_wide_grid_string_comps(spark, monkeypatch):
     """Coordinates past the 2^30 packing bound auto-switch the curve label
     to the overflow-safe string form (the packed multiply wraps mod 2^64
     beyond the bound and *8 is not injective there — vertices exactly
     2^31 apart in x would merge). The wide path must still consume every
     segment exactly once, produce one curve per connected component, and
-    flow the string label through simplify."""
+    flow the string label through simplify. Both sides of the one CC cap
+    give the same curves and labels."""
     levels = [999.5]
     segs = contour.segments(_shifted_dem(spark), levels)
     pl = contour.polylines(segs, levels)
     assert dict(pl.dtypes)["comp"] == "string"
-    by_comp: dict = {}
-    for r in pl.collect():
-        by_comp.setdefault(r["comp"], []).append((r["seq"], r["x"], r["y"]))
+    both = [_curves(contour.polylines(segs, levels)) for _ in _both_caps(monkeypatch)]
+    assert both[0] == both[1]
+    by_comp = both[0]
     # every consecutive pair is one input segment; multiset equality
     seg_set = sorted(
         (min((r["x1"], r["y1"]), (r["x2"], r["y2"])),
@@ -541,8 +578,8 @@ def test_polylines_wide_grid_string_comps(spark):
         for r in segs.collect()
     )
     walked = []
-    for rows in by_comp.values():
-        walked += _walked_pairs([(x, y) for _, x, y in sorted(rows)])
+    for pts in by_comp.values():
+        walked += _walked_pairs(pts)
     assert sorted(walked) == seg_set
     # one curve per component (wide topology agrees)
     topo = contour.topology(segs, levels).collect()
