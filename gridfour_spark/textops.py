@@ -609,53 +609,42 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 64) -> DataFrame:
 
     Up to graph._CC_LOCAL_MAX_EDGES symmetrized edges one graph.cc_kernel
     task labels the whole graph. Above it: distributed min-label
-    propagation with POINTER DOUBLING **and
-    shortcut-edge augmentation**: each round (a) every node takes the min
-    label over itself and its neighbors (one edge join + partial-
-    aggregated groupBy min), (b) labels jump to their label's label (one
-    self-join), and (c) every node's (node <-> label) link joins the edge
-    set for the next round. Step (c) is what makes the doubling REAL:
-    without it, a long path whose ids are randomly ordered stalls on
-    local-minimum plateaus and the label front moves O(1) hops per round
-    — measured in round 7 as 27 leftover components on a 2000-node
-    permuted path after 25 rounds (monotone-id test paths had masked
-    this: their label chains happen to compress perfectly). With the
-    shortcut links the reachable ball doubles per round, so convergence
-    is O(log diameter) on adversarial orderings too (pytest sweeps
-    permuted paths/cycles to 200k nodes and random graphs vs a scalar
-    union-find). The edge set grows by <= |V| links per round and is
-    re-distinct-ed, staying O(|E| + |V| log D).
+    propagation with POINTER DOUBLING and shortcut-edge augmentation. Each
+    round (a) every node takes the min label over itself and its neighbors
+    (one edge join + partial-aggregated groupBy min), (b) labels jump to
+    their label's label (one self-join), and (c) every node's (node <->
+    label) link joins the edge set for the next round. Without (c) a long
+    path with randomly ordered ids stalls on local-minimum plateaus
+    (tests/test_cc.py); with it the reachable ball doubles per round, so
+    convergence is O(log diameter) on adversarial orderings too. The edge
+    set grows by <= |V| links per round and is re-distinct-ed, staying
+    O(|E| + |V| log D).
 
     Converges when no label changes; raises RuntimeError if max_iters is
-    exhausted instead of returning silently-wrong under-merged labels.
-    Each round ends in localCheckpoint(): iterative self-referencing
-    plans otherwise GROW EXPONENTIALLY (every round embeds the previous
-    round's join tree twice) until Catalyst itself OOMs — lineage
-    truncation per iteration is the standard Spark pattern for fixpoint
-    algorithms, and on a real cluster it also caps the recovery cost of
-    a lost executor to one round. The edge and initial-label caches are
-    released on return and when a step raises."""
+    exhausted instead of returning under-merged labels. Each round ends in
+    localCheckpoint(): a self-referencing plan otherwise grows exponentially
+    (each round embeds the previous join tree twice) until Catalyst OOMs,
+    and on a cluster it caps a lost executor's recovery at one round. Each
+    round releases the label and edge frames it supersedes; only the last
+    label frame, which the result reads, outlives the call, and none does
+    when a step raises."""
     E = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    E = E0 = E.unionByName(
+    E = E.unionByName(
         E.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct().persist()
-    L0 = None
+    L = newL = None
     try:
         # a pair graph up to the one CC cap resolves in ONE executor task
         # (graph.cc_kernel) instead of O(log D) doubling rounds of ~5 jobs
         # each — identical labels by construction (rep = min node of the
         # component). The distributed doubling below is the over-cap path.
         if E.count() <= graph._CC_LOCAL_MAX_EDGES:
-            lab = _persist_tracked(graph.one_task_components(
+            L = _persist_tracked(graph.one_task_components(
                 E.select(F.col("src").alias("_va"), F.col("dst").alias("_vb"))
             ))
-            try:
-                lab.count()  # materialize before dropping E's cache (lab reads E)
-            except BaseException:
-                lab.unpersist()
-                raise
-            sizes = lab.groupBy("rep").agg(F.count("*").alias("cluster_size"))
-            return lab.join(sizes, "rep").select(
+            L.count()  # materialize before dropping E's cache (L reads E)
+            sizes = L.groupBy("rep").agg(F.count("*").alias("cluster_size"))
+            return L.join(sizes, "rep").select(
                 F.col("node").alias("doc_id"),
                 F.col("rep").alias("cluster_id"),
                 "cluster_size",
@@ -664,12 +653,11 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 64) -> DataFrame:
         # shot — only the ITERATION output needs truncation. (localCheckpoint
         # directly over the LSH pipeline's plan also trips a Catalyst
         # AttributeMap bug in Spark 4.1 — round-5 finding.)
-        L = L0 = (
+        L = (
             E.select(F.col("src").alias("doc_id")).distinct()
             .withColumn("label", F.col("doc_id"))
             .persist()
         )
-        converged = False
         for _ in range(max_iters):
             prop = E.join(L, E.src == L.doc_id).select(
                 F.col("dst").alias("doc_id"), "label"
@@ -699,9 +687,9 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 64) -> DataFrame:
                 .filter(F.col("n.label") != F.col("o.label"))
                 .count()
             )
+            _release(L)  # superseded: newL is materialized
             L = newL
             if changed == 0:
-                converged = True
                 break
             # shortcut augmentation: next round's neighborhoods include each
             # node's current best-known representative, so min information
@@ -709,25 +697,38 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 64) -> DataFrame:
             links = L.filter(F.col("doc_id") != F.col("label")).select(
                 F.col("doc_id").alias("src"), F.col("label").alias("dst")
             )
-            E = (
+            newE = (
                 E.unionByName(links)
                 .unionByName(links.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
                 .distinct()
                 .localCheckpoint()
             )
-        if not converged:
+            _release(E)
+            E = newE
+        else:
             raise RuntimeError(
                 f"dedup_clusters: no fixpoint after {max_iters} rounds — "
                 "component diameter exceeds 2^rounds, raise max_iters"
             )
-        sizes = L.groupBy("label").agg(F.count("*").alias("cluster_size"))
-        return L.join(sizes, "label").select(
-            "doc_id", F.col("label").alias("cluster_id"), "cluster_size"
-        )
+    except BaseException:
+        for df in (L, newL):
+            if df is not None:
+                _release(df)
+        raise
     finally:
-        E0.unpersist()
-        if L0 is not None:
-            L0.unpersist()
+        _release(E)
+    sizes = L.groupBy("label").agg(F.count("*").alias("cluster_size"))
+    return L.join(sizes, "label").select(
+        "doc_id", F.col("label").alias("cluster_id"), "cluster_size"
+    )
+
+
+def _release(df: DataFrame) -> None:
+    """Unpersist a frame; a localCheckpoint() frame's blocks are its RDD's."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().logical()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
 
 
 def dedup_clusters_sql(jaccard_threshold: float = 0.3, docs_src: str = "documents") -> str:
