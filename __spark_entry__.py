@@ -37,22 +37,31 @@ from gridfour_spark.tiling import tile_assignment_sql, with_tile_assignment
 # GvrsFileSpecification.java:330-332) for grid-math queries.
 SPEC_A = GridSpec(n_rows=500, n_cols=600, n_rows_in_tile=40, n_cols_in_tile=55)
 
-# session-scoped tile-store cache: several queries sample the same synthetic
-# store; persist it once per SparkSession (the reference's LRU tile cache
-# equivalent at the whole-store granularity)
-_TILE_CACHE: dict = {}
+# session-scoped INPUT frames that several queries share (synthetic tile
+# stores, the span-geometry chain, the per-tile DEM stats): each is persisted
+# and materialized once per (SparkSession, key) — the reference's LRU tile
+# cache equivalent at the whole-frame granularity. bench.py times the span
+# geometry build explicitly (span_geometry_build) so the amortization is
+# disclosed, not hidden.
+_SESSION_CACHE: dict = {}
+
+
+def _session_cached(spark: SparkSession, key: tuple, build: Callable[[], DataFrame]) -> DataFrame:
+    app = spark.sparkContext.applicationId
+    if (app, key) not in _SESSION_CACHE:
+        for k in [k for k in _SESSION_CACHE if k[0] != app]:  # drop dead sessions
+            _SESSION_CACHE.pop(k)
+        df = build().persist()
+        df.count()
+        _SESSION_CACHE[(app, key)] = df
+    return _SESSION_CACHE[(app, key)]
 
 
 def _tiles_cached(spark: SparkSession, spec: GridSpec, value: str = "dem"):
-    app = spark.sparkContext.applicationId
-    key = (app, spec, value)
-    if key not in _TILE_CACHE:
-        for k in [k for k in _TILE_CACHE if k[0] != app]:  # drop dead sessions
-            _TILE_CACHE.pop(k)
-        t = store.build_tiles(synth.grid_df(spark, spec, value=value), spec).persist()
-        t.count()
-        _TILE_CACHE[key] = t
-    return _TILE_CACHE[key]
+    return _session_cached(
+        spark, ("tiles", spec, value),
+        lambda: store.build_tiles(synth.grid_df(spark, spec, value=value), spec),
+    )
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -64,43 +73,21 @@ def entry(spark: SparkSession) -> DataFrame:
 # queries
 # ---------------------------------------------------------------------------
 
-# session-scoped span-geometry + DEM-dim caches (round-3 item 6): the
-# spans->geometry->tile chain and the per-tile DEM stats are INPUTS shared
-# by several queries; materialize each once per (session, sf_dir) like the
-# tile-store cache above. bench.py times the materialization explicitly
-# (span_geometry_build) so the amortization is disclosed, not hidden.
-_SPANS_TILES_CACHE: dict = {}
-_DEM_STATS_CACHE: dict = {}
-
-
 def _spans_tiles_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    app = spark.sparkContext.applicationId
-    key = (app, sf_dir)
-    if key not in _SPANS_TILES_CACHE:
-        for k in [k for k in _SPANS_TILES_CACHE if k[0] != app]:
-            _SPANS_TILES_CACHE.pop(k)
-        # round 8: the cache materializes ONLY the column union its three
-        # consumers read (flagship: doc_id/kind/z/tile_index,
-        # docs_tile_assign: tile_index/index_in_tile, salted_join:
-        # doc_id/span_offset/tile_index) — `text`/`media_ref`/lat/lon no
-        # longer cross the Arrow barrier or sit in the persisted cache
-        df = pipeline.spans_with_tiles(
-            spark, sf_dir, keep=["doc_id", "span_offset", "kind"]
-        ).persist()
-        df.count()
-        _SPANS_TILES_CACHE[key] = df
-    return _SPANS_TILES_CACHE[key]
+    # only the column union its three consumers read (flagship:
+    # doc_id/kind/z/tile_index, docs_tile_assign: tile_index/index_in_tile,
+    # salted_join: doc_id/span_offset/tile_index) crosses the Arrow barrier
+    # and sits in the cache
+    return _session_cached(
+        spark, ("spans", sf_dir),
+        lambda: pipeline.spans_with_tiles(spark, sf_dir, keep=["doc_id", "span_offset", "kind"]),
+    )
 
 
 def _dem_stats_cached(spark: SparkSession) -> DataFrame:
-    app = spark.sparkContext.applicationId
-    if app not in _DEM_STATS_CACHE:
-        for k in [k for k in _DEM_STATS_CACHE if k != app]:
-            _DEM_STATS_CACHE.pop(k)
-        df = pipeline.dem_tile_stats(spark, GLOBAL_GRID).persist()
-        df.count()
-        _DEM_STATS_CACHE[app] = df
-    return _DEM_STATS_CACHE[app]
+    return _session_cached(
+        spark, ("dem_stats",), lambda: pipeline.dem_tile_stats(spark, GLOBAL_GRID)
+    )
 
 
 def _q_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -908,7 +895,7 @@ def _q_hyper_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the aggregate, not raw events through lazy lineage (without this the
     # union plan scans raw three times and the continuous-aggregate claim
     # would be false in-plan)
-    minute = textops._persist_tracked(minute)
+    minute = minute.persist()
 
     def _up(finer, unit):
         return finer.groupBy(
@@ -1830,7 +1817,7 @@ def _q_compression_multi_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     # round 8: the two per-element branches below otherwise re-evaluate the
     # whole build->compress->decompress chain through lineage (plan subtree
     # duplication, guide §5) — persist the decompressed store once
-    back = textops._persist_tracked(back)
+    back = back.persist()
     outs = []
     for el in ["band2", "dem"]:
         c = store.tiles_to_cells(back.filter(F.col("element") == el), spec)
@@ -2147,9 +2134,9 @@ def _q_compression_verify_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # over the SAME store; build it once and share (plan-level reuse inside
     # this one suite query — the compression itself still runs from the
     # tile store on every invocation)
-    comp = textops._persist_tracked(
-        tilecodec.compress_tiles(_tiles_cached(spark, SPEC_A, "dem"), SPEC_A, use_lsop=True)
-    )
+    comp = tilecodec.compress_tiles(
+        _tiles_cached(spark, SPEC_A, "dem"), SPEC_A, use_lsop=True
+    ).persist()
     race = _q_compression(spark, sf_dir, comp=comp).select(
         F.lit("race").alias("leg"),
         F.col("n_tiles").alias("n_cells"),
@@ -2183,12 +2170,10 @@ def _q_compression_verify_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once and share (the per-leg store writes/updates/reads still run)
     from gridfour_spark import gvrsfile as _G
 
-    _blocks = textops._persist_tracked(
-        _G.gvrs_export_blocks(
-            _tiles_cached(spark, SPEC_A, "dem"), SPEC_A,
-            _G.default_element("z", "int"), compress=False,
-        )
-    )
+    _blocks = _G.gvrs_export_blocks(
+        _tiles_cached(spark, SPEC_A, "dem"), SPEC_A,
+        _G.default_element("z", "int"), compress=False,
+    ).persist()
     upd = _q_update_store_verify(spark, sf_dir, blocks=_blocks).select(
         F.lit("update").alias("leg"),
         F.col("n_cells"),

@@ -84,9 +84,8 @@ def cmd_geometry(_names):
     _warmup(spark, entrymod)
     samples = []
     for _ in range(REPEATS):
-        for k, df in list(entrymod._SPANS_TILES_CACHE.items()):
-            df.unpersist()
-            entrymod._SPANS_TILES_CACHE.pop(k)
+        for k in [k for k in entrymod._SESSION_CACHE if k[1][0] == "spans"]:
+            entrymod._SESSION_CACHE.pop(k).unpersist()
         t0 = time.time()
         entrymod._spans_tiles_cached(spark, SF_DIR)
         samples.append(round(time.time() - t0, 3))

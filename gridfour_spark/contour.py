@@ -252,7 +252,7 @@ def _cc_segments(e: DataFrame, mx: int, n_edges: int, id_type: str) -> DataFrame
     e: (_va, _vb, x1) edge frame; mx/n_edges from _coord_stats; id_type =
     'long' (packed) or 'string' (wide lpad'ed ids, where lexicographic
     min == numeric min)."""
-    from gridfour_spark.textops import _persist_tracked, dedup_clusters
+    from gridfour_spark.textops import dedup_clusters
 
     if n_edges <= graph._CC_LOCAL_MAX_EDGES:
         return graph.one_task_components(e).withColumnRenamed("rep", "comp")
@@ -264,10 +264,11 @@ def _cc_segments(e: DataFrame, mx: int, n_edges: int, id_type: str) -> DataFrame
     )
     # persisted: per_node, the distinct-rep frame and the final label join
     # all read links — without the persist the CC kernel would re-run per
-    # consumer (plan lineage, not data, is what DataFrames share)
-    links = _persist_tracked(
-        banded.groupBy("_band").applyInPandas(graph.cc_kernel, f"node {id_type}, rep {id_type}")
-    )
+    # consumer (plan lineage, not data, is what DataFrames share). The lazy
+    # result reads it, so it is cached for the session, keyed by plan.
+    links = banded.groupBy("_band").applyInPandas(
+        graph.cc_kernel, f"node {id_type}, rep {id_type}"
+    ).persist()
     # one rep-pair edge per node spanning >=2 bands; nodes interior to one
     # band contribute nothing to the contracted graph
     per_node = links.groupBy("node").agg(

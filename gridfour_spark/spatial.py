@@ -321,7 +321,9 @@ def knn_join(
        from are points x anchors-in-disk. The certified output, the
        uncertified sliver and the stats_out telemetry are filters over that
        one frame, so the explode + join + window pass runs once per call
-       instead of once per consumer branch of the final union.
+       instead of once per consumer branch of the final union. The frame
+       is cached for the session, keyed by plan: a repeat call on the same
+       points and anchors reuses it.
        Points that fail the certificate (poles, sparse neighborhoods)
        RETRY once with a 3x-widened ring and re-certify (round-4 review:
        caps the exhaustive set when the failure is local sparseness, the
@@ -451,14 +453,12 @@ def knn_join(
         # plan step 5: the ranked top-k (points x k rows; one null-anchor row
         # for a point with no candidates) is the one materialization of
         # this pass; every consumer below is a filter over it
-        ranked = _persist_tracked(
-            cand.select(*pt_cols, "rank", "anchor_id", "dist_km", certified.alias("_cert"))
-        )
+        ranked = cand.select(
+            *pt_cols, "rank", "anchor_id", "dist_km", certified.alias("_cert")
+        ).persist()
         out = ranked.filter(F.col("_cert") & F.col("anchor_id").isNotNull()).drop("_cert")
         failed = ranked.filter(~F.col("_cert") & (F.col("rank") == 1)).select(*pt_cols)
         return out, failed
-
-    from gridfour_spark.textops import _persist_tracked
 
     out_cert, fb_pts = _disk_pass(points, ring)
     if stats_out is not None:

@@ -34,26 +34,12 @@ from gridfour_spark import graph
 N_MINHASH = 8  # 2 bands x 4 rows (small-SF default; see lsh_params for scale)
 SHINGLE = 3
 
-# bounded registry for the signature/shingle frames persisted inside the
-# lazy dedup pipelines (they are consumed on several join sides, so they
-# must be materialized, but the returned DataFrames are lazy — nothing
-# inside the function can unpersist safely). Oldest frames are evicted
-# once the registry exceeds the window one-or-two invocations need;
-# an evicted frame stays CORRECT (it just recomputes if an old handle is
-# re-evaluated), so storage is bounded across repeated bench/stress calls.
-_PERSIST_WINDOW = 6
-_PERSISTED: list = []
-
-
-def _persist_tracked(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _PERSISTED.append(df)
-    while len(_PERSISTED) > _PERSIST_WINDOW:
-        try:
-            _PERSISTED.pop(0).unpersist()
-        except Exception:  # session of an old frame may already be stopped
-            pass
-    return df
+# The signature/shingle frames inside the lazy dedup pipelines are persisted:
+# several join sides consume them, so they must be materialized, and the
+# returned DataFrames are lazy, so nothing inside the function can unpersist
+# them. Such a frame is cached for the session, keyed by plan: Spark's
+# CacheManager finds an equal plan already cached and reuses it, and the
+# entry lives until spark.catalog.clearCache() or the session stops.
 
 
 def lsh_params(
@@ -361,9 +347,9 @@ def near_dup_candidates(
     # shingle->minhash pipeline per consumer otherwise (measured 40s vs
     # 0.3s at sf0.1). At web scale this is the checkpoint-the-signatures
     # step every production LSH pipeline has; rows are (doc_id, band,
-    # bucket) — tiny relative to the corpus. _persist_tracked bounds
-    # executor storage to the CURRENT invocation's frames.
-    bandsdf = _persist_tracked(minhash_bands(docs, k, bands))
+    # bucket) — tiny relative to the corpus. Cached for the session, keyed
+    # by plan: a repeat call on the same docs reuses it.
+    bandsdf = minhash_bands(docs, k, bands).persist()
     if n_salts <= 1:
         cand = bandsdf.alias("l").join(bandsdf.alias("r"), on=["band", "bucket"])
     else:
@@ -400,10 +386,11 @@ def near_dup_pairs(
     # persisted for the same reason as the signature frame: consumed twice
     # (a/b sides of the verification join) on different keys, so no
     # exchange reuse is possible
-    sh = _persist_tracked(
+    sh = (
         with_tokens(docs)
         .withColumn("shingles", _shingles_expr())
         .select("doc_id", F.array_distinct("shingles").alias("sset"), F.size(F.array_distinct("shingles")).alias("n"))
+        .persist()
     )
     joined = (
         cand.join(sh.alias("a"), cand.doc_a == F.col("a.doc_id"))
@@ -550,7 +537,7 @@ def simhash_near_dup(docs: DataFrame, max_hamming: int = 8) -> DataFrame:
     equi-join per band, verify with exact per-chunk popcount hamming."""
     # persisted like the minhash signature frame: the chunk self-join (and
     # distinct) otherwise re-runs the 64-bit-sum aggregation per consumer
-    s = _persist_tracked(simhash_chunks(docs))
+    s = simhash_chunks(docs).persist()
     bands = None
     for ci in range(4):
         part = s.select(
@@ -639,9 +626,9 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 64) -> DataFrame:
         # each — identical labels by construction (rep = min node of the
         # component). The distributed doubling below is the over-cap path.
         if E.count() <= graph._CC_LOCAL_MAX_EDGES:
-            L = _persist_tracked(graph.one_task_components(
+            L = graph.one_task_components(
                 E.select(F.col("src").alias("_va"), F.col("dst").alias("_vb"))
-            ))
+            ).persist()
             L.count()  # materialize before dropping E's cache (L reads E)
             sizes = L.groupBy("rep").agg(F.count("*").alias("cluster_size"))
             return L.join(sizes, "rep").select(
@@ -928,7 +915,7 @@ def bpe_train(
         rows = types_df.limit(_BPE_DRIVER_MAX_TYPES + 1).collect()
         if len(rows) > _BPE_DRIVER_MAX_TYPES:
             rows = None
-            st = types_df.localCheckpoint(eager=True)
+            st = ckpt = types_df.localCheckpoint(eager=True)
     finally:
         types_df.unpersist()
     if rows is not None:
@@ -970,7 +957,9 @@ def bpe_train(
         )
         since_ckpt += 1
         if since_ckpt >= _BPE_CKPT_EVERY:
-            st = st.localCheckpoint(eager=True)
+            new = st.localCheckpoint(eager=True)
+            _release(ckpt)  # superseded: the new checkpoint is materialized
+            st = ckpt = new
             since_ckpt = 0
     return merges, st
 

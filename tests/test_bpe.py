@@ -64,6 +64,20 @@ def test_merges_match_scalar_reference(spark):
     assert got_state == ref_state
 
 
+def test_over_cap_loop_keeps_one_checkpoint(spark, monkeypatch):
+    """The distributed merge loop truncates lineage with a local checkpoint
+    every _BPE_CKPT_EVERY rounds; each one supersedes the last, so only the
+    checkpoint the returned state reads stays persisted."""
+    monkeypatch.setattr(T, "_BPE_DRIVER_MAX_TYPES", 0)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    merges, st = T.bpe_train(_df(spark), n_merges=24)
+    assert len(set(jsc.getPersistentRDDs().keys()) - before) <= 1
+    ref_merges, ref_state = scalar_bpe(CORPUS, 24)
+    assert [tuple(m) for m in merges] == ref_merges
+    assert {r["word"]: r["seq"] for r in st.collect()} == ref_state
+
+
 def test_doc_counts_match_scalar_reference(spark):
     df = _df(spark)
     _, st = T.bpe_train(df, n_merges=12)

@@ -15,6 +15,12 @@ from gridfour_spark import spatial, textops
 from test_bpe import CORPUS, scalar_bpe
 from test_spatial_knn import _anchors, _points, _polar_anchors
 
+NEAR_DUPS = CORPUS + [
+    "the quick brown fox jumps over the lazy dog again and again",
+    "the quick brown fox jumps over the lazy dog again and once more",
+    "a quick brown fox jumps over the lazy dog again and again",
+]
+
 
 def _counted(df):
     """(identity view of df, accumulator of the rows read through it)."""
@@ -68,3 +74,37 @@ def test_bpe_train_reads_docs_once(spark, monkeypatch, cap):
     # the type-table cache is released (the distributed path's returned
     # state lives in local checkpoints, which are not caches)
     assert _cached_rdds(spark) == cached_before
+
+
+def _near_dup_call(spark):
+    docs = spark.createDataFrame(list(enumerate(NEAR_DUPS)), "doc_id long, text string")
+    return docs, lambda d: textops.near_dup_pairs(d, 0.5)
+
+
+def _knn_escalation_call(spark):
+    pts = spark.createDataFrame(_points(200), "pt_id int, lat double, lon double")
+    adf = spark.createDataFrame(_polar_anchors(), "anchor_id int, alat double, alon double")
+    return pts, lambda p: spatial.knn_join(p, adf, k=3, res=5, ring=1)
+
+
+@pytest.mark.parametrize(
+    "case", [_near_dup_call, _knn_escalation_call], ids=["near_dup_pairs", "knn_join"]
+)
+def test_repeat_calls_reuse_the_session_cache(spark, case):
+    """A frame persisted inside a lazy result is cached for the session,
+    keyed by plan: every repeat call on one input finds the first call's
+    frames cached, so it reads none of the input, and the set of persisted
+    RDDs stays the one the first call left."""
+    df, call = case(spark)
+    counted, acc = _counted(df)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    reads, added, outs = [], [], []
+    for _ in range(5):
+        n0 = acc.value
+        outs.append(sorted(call(counted).collect()))
+        reads.append(acc.value - n0)
+        added.append(set(jsc.getPersistentRDDs().keys()) - before)
+    assert outs[0] and all(o == outs[0] for o in outs)
+    assert reads[0] > 0 and reads[1:] == [0] * 4, reads
+    assert added[0] and all(a == added[0] for a in added), added
