@@ -71,3 +71,27 @@ def one_task_components(edges: DataFrame) -> DataFrame:
         .groupBy("_g")
         .applyInPandas(cc_kernel, f"node {t}, rep {t}")
     )
+
+
+def one_task_clusters(edges: DataFrame) -> DataFrame:
+    """one_task_components plus `size`, the node count of each node's
+    component, for a CACHED edge frame counted against the cap: its one
+    task reads the cache through coalesce(1), with no shuffle stage before
+    it (on a lazy frame coalesce(1) would run the whole upstream in that
+    task, hence the grouping there)."""
+    t = dict(edges.dtypes)["_va"]
+
+    def kernel(batches):
+        import pandas as pd
+
+        pdfs = list(batches)
+        if not pdfs:
+            return
+        out = cc_kernel(None, pd.concat(pdfs, ignore_index=True))
+        # dense label of each node: rep is a node, and nodes come sorted
+        lab = np.searchsorted(out["node"].to_numpy(), out["rep"].to_numpy())
+        yield out.assign(size=np.bincount(lab, minlength=len(out))[lab])
+
+    return edges.select("_va", "_vb").coalesce(1).mapInPandas(
+        kernel, f"node {t}, rep {t}, size long"
+    )

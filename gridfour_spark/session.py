@@ -11,8 +11,14 @@ unchanged ones. Spark's codegen cache is sized to hold every class a pass
 of the engine compiles; at Spark's default of 100 entries each pass evicted
 the previous pass's classes and compiled them again. Spark reads that size
 once per JVM, when the first session builds the cache, so it holds only
-when get_spark creates the JVM's first session. Driver memory defaults to
-half of physical memory, at most 8 GB.
+when get_spark creates the JVM's first session. PySpark's DataFrame
+debugging is off: it made every Column call capture its Python call site
+(a stack walk and four py4j round trips), about 60 % of the round trips
+of building a docs call. Errors keep their error class and lose only the
+Python file:line. PySpark reads the setting once per process, at the
+first Column call that sees an active session, so it holds when that is
+get_spark's session. Driver memory defaults to half of physical memory,
+at most 8 GB.
 """
 
 from __future__ import annotations
@@ -58,6 +64,8 @@ def get_spark(
         .config("spark.python.daemon.module", "gridfour_spark.pydaemon")
         # >= 2x the 1172 distinct classes all 50 entry queries compile (CHANGES.md)
         .config("spark.sql.codegen.cache.maxEntries", "2500")
+        # no Python call-site capture per Column call (module doc)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # Deterministic arithmetic discipline: ANSI off so integer hashing
         # (doc geometry derivation) uses well-defined wraparound-free pmod
         # chains without runtime overflow checks in the hot path; every

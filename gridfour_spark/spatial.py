@@ -350,7 +350,12 @@ def knn_join(
         # persist the (broadcast-tiny) anchor frame so that action and the
         # join-time broadcast share one scan (round-4 review nit)
         anchors = anchors.persist()
-        res = knn_res_for(anchors.count(), k)
+        try:
+            n_anchors = anchors.count()
+        except BaseException:
+            anchors.unpersist()  # no cache entry outlives a failed count
+            raise
+        res = knn_res_for(n_anchors, k)
     n_rows = 1 << res
     n_cols = 1 << (res + 1)
     lat_step = 180.0 / n_rows
@@ -403,8 +408,7 @@ def knn_join(
             )
         )
         pts = (
-            points_in.withColumn("_prow", prow)
-            .withColumn("_pcol", pcol)
+            points_in.withColumns({"_prow": prow, "_pcol": pcol})
             # explode_OUTER: a NULL/out-of-domain coordinate yields an empty
             # disk; the point must still surface (with a null cell) so it
             # reaches the fallback instead of silently vanishing (round-4
@@ -424,9 +428,11 @@ def knn_join(
         # sorted pass (the k-th distance only matters once _n >= k)
         whole = wo.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
         cand = (
-            cand.withColumn("rank", F.row_number().over(wo).cast("long"))
-            .withColumn("_n", F.count("anchor_id").over(whole))
-            .withColumn("_kd", F.nth_value("dist_km", k).over(whole))
+            cand.withColumns({
+                "rank": F.row_number().over(wo).cast("long"),
+                "_n": F.count("anchor_id").over(whole),
+                "_kd": F.nth_value("dist_km", k).over(whole),
+            })
             .filter(F.col("rank") <= k)
         )
 

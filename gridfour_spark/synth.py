@@ -168,9 +168,11 @@ def docs_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # would still emit nothing (n_spans=0 -> span_offset 0 < 0 fails), the
     # same as the DuckDB twin's generate_series(NULL) emitting no rows.
     df = (
-        docs.select("doc_id", F.split(F.col("text"), " ").alias("words"))
-        .withColumn(
-            "n_spans", F.coalesce(F.expr("CAST((size(words) + 7) div 8 AS INT)"), F.lit(0))
+        docs.select(
+            "doc_id",
+            F.split(F.col("text"), " ").alias("words"),
+            # `words` is a lateral alias: one analysis for both columns
+            F.coalesce(F.expr("CAST((size(words) + 7) div 8 AS INT)"), F.lit(0)).alias("n_spans"),
         )
         .withColumn("span_offset", F.explode(F.expr("sequence(0, greatest(n_spans - 1, 0))")))
         .filter(F.col("span_offset") < F.col("n_spans"))
@@ -246,7 +248,7 @@ FROM (
 
 def with_span_geometry(df: DataFrame) -> DataFrame:
     """Append deterministic (lat, lon) derived ONLY from (doc_id, offset)."""
-    return df.withColumn("lat", F.expr(LAT_SQL)).withColumn("lon", F.expr(LON_SQL))
+    return df.withColumns({"lat": F.expr(LAT_SQL), "lon": F.expr(LON_SQL)})
 
 
 def span_geometry_duckdb(inner: str = DOCS_SPANS_DUCKDB) -> str:

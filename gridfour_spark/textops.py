@@ -25,7 +25,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -271,8 +271,7 @@ def with_minhash(docs: DataFrame, k: int = N_MINHASH) -> DataFrame:
         # to two-arg callables, which would silently shadow the hash index
         return lambda p: p["h1"] + i * p["h2"]
 
-    for i in range(k):
-        d = d.withColumn(f"mh{i}", F.array_min(F.transform("_hp", _km(i))))
+    d = d.withColumns({f"mh{i}": F.array_min(F.transform("_hp", _km(i))) for i in range(k)})
     return d.drop("_hp")
 
 
@@ -594,14 +593,15 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 64) -> DataFrame:
     cluster_size) with cluster_id = the MIN doc id reachable through the
     pair graph (the canonical representative a training pipeline keeps).
 
-    Up to graph._CC_LOCAL_MAX_EDGES symmetrized edges one graph.cc_kernel
-    task labels the whole graph. Above it: distributed min-label
-    propagation with POINTER DOUBLING and shortcut-edge augmentation. Each
-    round (a) every node takes the min label over itself and its neighbors
-    (one edge join + partial-aggregated groupBy min), (b) labels jump to
-    their label's label (one self-join), and (c) every node's (node <->
-    label) link joins the edge set for the next round. Without (c) a long
-    path with randomly ordered ids stalls on local-minimum plateaus
+    Up to graph._CC_LOCAL_MAX_EDGES pairs one graph.cc_kernel task labels
+    the whole graph and counts each component's nodes. Above it:
+    distributed min-label propagation with POINTER DOUBLING and
+    shortcut-edge augmentation over the symmetrized pairs. Each round (a)
+    every node takes the min label over itself and its neighbors (one edge
+    join + partial-aggregated groupBy min), (b) labels jump to their
+    label's label (one self-join), and (c) every node's (node <-> label)
+    link joins the edge set for the next round. Without (c) a long path
+    with randomly ordered ids stalls on local-minimum plateaus
     (tests/test_cc.py); with it the reachable ball doubles per round, so
     convergence is O(log diameter) on adversarial orderings too. The edge
     set grows by <= |V| links per round and is re-distinct-ed, staying
@@ -615,27 +615,31 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 64) -> DataFrame:
     round releases the label and edge frames it supersedes; only the last
     label frame, which the result reads, outlives the call, and none does
     when a step raises."""
-    E = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    E = E.unionByName(
-        E.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().persist()
-    L = newL = None
+    # the one evaluation of `pairs`: its cached projection feeds either
+    # path, and the no-op write that caches it also counts it
+    P = pairs.select(F.col("doc_a").alias("_va"), F.col("doc_b").alias("_vb")).persist()
+    E = L = newL = None
     try:
+        n_pairs = Observation()
+        _materialize(P.observe(n_pairs, F.count(F.lit(1)).alias("n")))
         # a pair graph up to the one CC cap resolves in ONE executor task
         # (graph.cc_kernel) instead of O(log D) doubling rounds of ~5 jobs
         # each — identical labels by construction (rep = min node of the
-        # component). The distributed doubling below is the over-cap path.
-        if E.count() <= graph._CC_LOCAL_MAX_EDGES:
-            L = graph.one_task_components(
-                E.select(F.col("src").alias("_va"), F.col("dst").alias("_vb"))
-            ).persist()
-            L.count()  # materialize before dropping E's cache (L reads E)
-            sizes = L.groupBy("rep").agg(F.count("*").alias("cluster_size"))
-            return L.join(sizes, "rep").select(
+        # component; the kernel ignores edge direction and duplicates, so
+        # the raw pairs are its input). The cap bounds the rows that task
+        # receives. The distributed doubling below is the over-cap path.
+        if n_pairs.get["n"] <= graph._CC_LOCAL_MAX_EDGES:
+            L = graph.one_task_clusters(P).select(
                 F.col("node").alias("doc_id"),
                 F.col("rep").alias("cluster_id"),
-                "cluster_size",
-            )
+                F.col("size").alias("cluster_size"),
+            ).persist()
+            _materialize(L)  # before dropping P's cache (L reads P)
+            return L
+        E = P.select(F.col("_va").alias("src"), F.col("_vb").alias("dst"))
+        E = E.unionByName(
+            E.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        ).distinct().persist()
         # persist (not checkpoint) for the input frames: their lineage is one
         # shot — only the ITERATION output needs truncation. (localCheckpoint
         # directly over the LSH pipeline's plan also trips a Catalyst
@@ -703,11 +707,19 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 64) -> DataFrame:
                 _release(df)
         raise
     finally:
-        _release(E)
+        _release(P)
+        if E is not None:
+            _release(E)
     sizes = L.groupBy("label").agg(F.count("*").alias("cluster_size"))
     return L.join(sizes, "label").select(
         "doc_id", F.col("label").alias("cluster_id"), "cluster_size"
     )
+
+
+def _materialize(df: DataFrame) -> None:
+    """Run `df` to its end: a no-op write builds a persisted frame's cache
+    without the extra shuffle stage and job of a count()."""
+    df.write.format("noop").mode("overwrite").save()
 
 
 def _release(df: DataFrame) -> None:

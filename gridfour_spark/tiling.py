@@ -70,17 +70,18 @@ def with_tile_assignment(
     trow = F.expr(f"CAST({row_col} AS BIGINT) div {spec.n_rows_in_tile}")
     tcol = F.expr(f"CAST({col_col} AS BIGINT) div {spec.n_cols_in_tile}")
     p = out_prefix
-    df = df.withColumn(p + "tile_row", trow).withColumn(p + "tile_col", tcol)
+    # one analysis per dependency level: tile_row/tile_col, then the two
+    # indices that read them
+    df = df.withColumns({p + "tile_row": trow, p + "tile_col": tcol})
     tindex = (F.col(p + "tile_row") * F.lit(spec.n_cols_of_tiles) + F.col(p + "tile_col")).cast("long")
     if mark_invalid:
         tindex = F.when((r < 0) | (c < 0), F.lit(-1)).otherwise(tindex)
-    df = df.withColumn(p + "tile_index", tindex)
     row_in_tile = r - F.col(p + "tile_row") * F.lit(spec.n_rows_in_tile)
     col_in_tile = c - F.col(p + "tile_col") * F.lit(spec.n_cols_in_tile)
-    return df.withColumn(
-        p + "index_in_tile",
-        (row_in_tile * F.lit(spec.n_cols_in_tile) + col_in_tile).cast("long"),
-    )
+    return df.withColumns({
+        p + "tile_index": tindex,
+        p + "index_in_tile": (row_in_tile * F.lit(spec.n_cols_in_tile) + col_in_tile).cast("long"),
+    })
 
 
 def tile_assignment_sql(spec: GridSpec, row_expr: str = "row", col_expr: str = "col") -> dict[str, str]:
@@ -171,15 +172,11 @@ def with_geo_to_grid(
     col_f = F.when(in_fringe(c_raw), c_raw).when(in_fringe(c_180), c_180).otherwise(c_360)
 
     row_f = (F.col(lat_col).cast("double") - F.lit(spec.y0)) / F.lit(spec.cell_size_y)
-    df = df.withColumn("grid_row_f", row_f)
-    df = df.withColumn("grid_col_f", col_f)
-    df = df.withColumn(
-        "row", fringe_round(F.col("grid_row_f"), spec.n_rows, spec.row_fringe_0, spec.row_fringe_1)
-    )
-    df = df.withColumn(
-        "col", fringe_round(F.col("grid_col_f"), spec.n_cols, spec.col_fringe_0, spec.col_fringe_1)
-    )
-    return df
+    df = df.withColumns({"grid_row_f": row_f, "grid_col_f": col_f})
+    return df.withColumns({
+        "row": fringe_round(F.col("grid_row_f"), spec.n_rows, spec.row_fringe_0, spec.row_fringe_1),
+        "col": fringe_round(F.col("grid_col_f"), spec.n_cols, spec.col_fringe_0, spec.col_fringe_1),
+    })
 
 
 def with_grid_to_model(df: DataFrame, spec: GridSpec, row_col: str = "row", col_col: str = "col") -> DataFrame:

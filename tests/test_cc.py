@@ -15,12 +15,16 @@ scalar union-find on the same orderings.
 from __future__ import annotations
 
 import random
+from collections import Counter
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from gridfour_spark import graph
 from gridfour_spark.textops import dedup_clusters
+
+from test_single_evaluation import _counted
 
 
 @pytest.fixture()
@@ -144,6 +148,39 @@ def test_local_path_failure_releases_caches(spark, monkeypatch):
     with pytest.raises(Exception, match="cc kernel failed"):
         dedup_clusters(pairs)
     assert set(spark.sparkContext._jsc.getPersistentRDDs().keys()) == before
+
+
+@pytest.mark.parametrize("cap", [None, 0], ids=["one_task", "distributed"])
+def test_pairs_are_read_once(spark, monkeypatch, cap):
+    """The cached projection of the pairs is their one evaluation: the
+    count that picks the path, the labels and the sizes all read it."""
+    if cap is not None:
+        monkeypatch.setattr(graph, "_CC_LOCAL_MAX_EDGES", cap)
+    edges = [(_h(i), _h(i + 1)) for i in range(40)] + [(7, 8), (8, 7), (7, 8)]
+    counted, acc = _counted(spark.createDataFrame(edges, "doc_a long, doc_b long"))
+    rows = dedup_clusters(counted).collect()
+    labels = _uf_min_labels(edges)
+    sizes = Counter(labels.values())
+    assert sorted(map(tuple, rows)) == sorted((d, r, sizes[r]) for d, r in labels.items())
+    assert acc.value == len(edges)
+
+
+def test_one_task_path_runs_few_jobs(spark):
+    """Below the cap a call and a digest of its output run at most 6 jobs:
+    one caches and counts the pairs, the kernel's task caches the labels,
+    and the digest reads them. Symmetrizing, de-duplicating and a
+    groupBy of the sizes took 10."""
+    sc = spark.sparkContext
+    edges = [(_h(i) + 10**9, _h(i + 1) + 10**9) for i in range(50)]
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    sc.setJobGroup("dedup_clusters_jobs", "dedup_clusters jobs")
+    try:
+        out = dedup_clusters(pairs)
+        out.agg(F.count(F.lit(1)), F.sum(F.xxhash64(*out.columns))).collect()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert len(sc.statusTracker().getJobIdsForGroup("dedup_clusters_jobs")) <= 6
 
 
 def test_distributed_path_releases_superseded_frames(spark, force_distributed):

@@ -210,3 +210,22 @@ def test_knn_polar_concentrated_anchors_telemetry(spark):
     # their disk) and escalate; far-south points even fail the 3x ring
     assert esc > 0.5, esc
     assert fb > 0.0, fb
+
+
+def test_knn_anchor_count_failure_releases_the_anchor_cache(spark):
+    """The default resolution counts the anchors through a cache; when that
+    count raises, the anchor frame's cache entry goes with the raise."""
+    @F.udf("double")
+    def broken(lat):
+        raise ValueError("anchor udf failed")
+
+    pdf = spark.createDataFrame(_points(10), "pt_id int, lat double, lon double")
+    adf = spark.createDataFrame(_anchors(8), "anchor_id int, alat double, alon double")
+    adf = adf.withColumn("alat", broken("alat"))
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    with pytest.raises(Exception, match="anchor udf failed"):
+        spatial.knn_join(pdf, adf, k=3)
+    assert set(jsc.getPersistentRDDs().keys()) == before
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert not cache.lookupCachedData(adf._jdf).isDefined()
