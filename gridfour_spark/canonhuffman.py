@@ -29,6 +29,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from gridfour_spark import compress as C
+
 INT4_NULL_CODE = -(2**31)
 
 N_SYMBOLS_TOTAL = 260
@@ -229,6 +231,7 @@ def decode_block(
         data = bytes(bits)
     else:
         data = np.packbits(np.asarray(bits, dtype=np.uint8), bitorder="little").tobytes()
+    n_bits = 8 * len(data)
     # guard pad so 4-byte window reads never truncate near the end
     data += b"\x00\x00\x00"
     pos += 1  # one reserved bit (CanonicalHuffman.buildCodeLengthTree:305-306)
@@ -255,6 +258,8 @@ def decode_block(
         if sym < 256:
             prior = sym - 128
             out.append(prior)
+        elif pos > n_bits:  # escapes append nothing: only the data bounds them
+            break
         elif sym == I_ESCAPE_2BITS:
             part = _rd(data, pos, 2)
             pos += 2
@@ -270,6 +275,8 @@ def decode_block(
             out.append(prior)
         if len(out) > max_symbols:
             raise ValueError("canonical Huffman stream overruns the symbol budget")
+    if pos > n_bits:
+        raise ValueError("canonical Huffman block runs past the end of its bytes")
     return np.asarray(out, dtype=np.int64), pos
 
 
@@ -282,22 +289,18 @@ def decode_tile(payload: bytes, nr: int, nc: int) -> np.ndarray:
     otherwise the body is one canonical-Huffman block of predictor
     residuals applied through the shared predictor kernels.
     """
-    from gridfour_spark import compress as C
-
+    if len(payload) < 6:
+        raise ValueError(f"GvrsCanonicalHuffman packing of {len(payload)} bytes has no header")
     predictor = payload[1]
     seed = int.from_bytes(payload[2:6], "little", signed=True)
     if predictor == 0 and len(payload) == 6:
         return np.full(nr * nc, seed, dtype=np.int64)
-    bits = np.unpackbits(np.frombuffer(payload[6:], dtype=np.uint8), bitorder="little")
-    res, _pos = decode_block(bits, 0, nr * nc)
+    res, _pos = decode_block(payload[6:], 0, nr * nc)
     n_expected = C.n_symbols_for(predictor, nr, nc)
-    if res.size < n_expected:
-        # the Java decoder pre-zeroes its residual array; a stream that
-        # terminates early leaves trailing zeros (CodecCanonHuffman:190-192)
-        res = np.concatenate([res, np.zeros(n_expected - res.size, dtype=np.int64)])
-    return np.asarray(
-        C.ALL_PREDICTORS[predictor][1](seed, res[:n_expected], nr, nc)
-    ).ravel()
+    # the Java decoder pre-zeroes its residual array; a stream that
+    # terminates early leaves trailing zeros (CodecCanonHuffman:190-192)
+    res = np.pad(res[:n_expected], (0, max(0, n_expected - res.size)))
+    return np.asarray(C.unpredict(predictor, seed, res, nr, nc)).ravel()
 
 
 # --- encoder (write direction: the engine's export race can emit ----------
@@ -620,7 +623,7 @@ def _emit_text_units(v: np.ndarray, rev: np.ndarray, lens: np.ndarray,
     out.extend(np.concatenate(pv)[order], np.concatenate(pb)[order])
 
 
-ENGINE_CODEC_INDEX = 5  # engine-internal payload[0] for GvrsCanonicalHuffman
+ENGINE_CODEC_INDEX = C.CODECS.index("GvrsCanonicalHuffman")
 
 
 def encode_tile_packing(values: np.ndarray, nr: int, nc: int) -> dict | None:
@@ -629,8 +632,6 @@ def encode_tile_packing(values: np.ndarray, nr: int, nc: int) -> dict | None:
     through one canonical block. Payload layout matches the reference
     byte-for-byte after the codec-index remap: [index, predictor,
     seed(4 LE), body]. Returns {predictor, payload, n_bytes} or None."""
-    from gridfour_spark import compress as C
-
     v = np.asarray(values, dtype=np.int64).reshape(nr, nc)
     has_nulls = bool((v == INT4_NULL_CODE).any())
     if not (v != INT4_NULL_CODE).any():

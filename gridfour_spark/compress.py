@@ -429,6 +429,8 @@ def m32_decode(buf: bytes, n_symbols: int) -> np.ndarray:
     nxt = np.append(np.minimum(nxt, n), n)  # position n is a fixed point
 
     starts = _orbit(nxt, n_symbols)
+    if starts[-1] >= n:
+        raise ValueError(f"M32 stream of {n} bytes holds fewer than {n_symbols} symbols")
     first = b[starts]
     sym8 = first.astype(np.int8).astype(np.int32)
     out = np.where(sym8 == -128, np.int32(INT32_MIN), sym8)
@@ -452,10 +454,16 @@ def m32_decode(buf: bytes, n_symbols: int) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# Deflate codec + codec race
+# codec table, codec race and the one decode dispatch
 # ---------------------------------------------------------------------------
 
-CODEC_DEFLATE_INDEX = 0
+# packing byte 0 (the engine's codec index) -> the reference codec whose
+# packing it is: an engine packing differs from the reference packing only in
+# byte 0, which a GVRS file indexes into its own codec list. Index 3, the
+# engine's length-limited Huffman over M32 bytes (huffman.py), has no
+# reference codec and is never exported.
+CODECS = ["GvrsDeflate", "LSOP12", "GvrsFloat", "Huffman", "GvrsHuffman", "GvrsCanonicalHuffman"]
+CODEC_DEFLATE_INDEX = CODECS.index("GvrsDeflate")
 
 
 def encode_tile(
@@ -464,7 +472,6 @@ def encode_tile(
     nc: int,
     use_lsop: bool = False,
     use_huffman: bool = True,
-    use_lsop8: bool = False,
     use_gvrs_huffman: bool = False,
     use_canon: bool = False,
 ) -> dict:
@@ -481,19 +488,15 @@ def encode_tile(
     if use_lsop and not has_nulls:
         from gridfour_spark import lsop as _lsop
 
-        lsop_cands = [(_lsop.encode_lsop, "lsop12")]
-        if use_lsop8:  # shipped disabled in the reference (LsCodecUtility:73)
-            lsop_cands.append((_lsop.encode_lsop8, "lsop08"))
-        for enc8, cname in lsop_cands:
-            r = enc8(values.astype(np.int32), nr, nc)
-            if r is not None and (best is None or r["n_bytes"] < best["n_bytes"]):
-                best = {
-                    "predictor": r["predictor"],
-                    "payload": r["payload"],
-                    "n_bytes": r["n_bytes"],
-                    "n_symbols": nr * nc - 1,
-                    "codec": cname,
-                }
+        r = _lsop.encode_lsop(values.astype(np.int32), nr, nc)
+        if r is not None:
+            best = {
+                "predictor": r["predictor"],
+                "payload": r["payload"],
+                "n_bytes": r["n_bytes"],
+                "n_symbols": nr * nc - 1,
+                "codec": "lsop12",
+            }
     # null gating mirrors CodecDeflate.encode:158-186: tiles with embedded
     # nulls race ONLY the null-supporting predictor; tiles without race the
     # standard three
@@ -533,15 +536,8 @@ def encode_tile(
         if use_gvrs_huffman:  # reference tree-in-stream bitstream (format parity)
             from gridfour_spark import gvrshuffman as _g
 
-            gb, gp = _g.encode(m32)
             candidates.append(
-                (
-                    "huffman_gvrs",
-                    bytes([_g.GVRS_HUFFMAN_CODEC_INDEX])
-                    + header
-                    + gb.to_bytes(4, "little")
-                    + gp,
-                )
+                ("huffman_gvrs", bytes([_g.GVRS_HUFFMAN_CODEC_INDEX]) + header + _g.encode(m32)[1])
             )
         for codec_name, packing in candidates:
             if best is None or len(packing) < best["n_bytes"]:
@@ -576,35 +572,68 @@ def encode_tile(
 
 
 def decode_tile(packing: bytes, nr: int, nc: int) -> np.ndarray:
-    """Inverse of encode_tile — dispatch on the stored codec index
-    (CodecDeflate.decode:109-152; CodecMaster.decode:195-202)."""
-    codec = packing[0]
-    if codec == 5:  # GvrsCanonicalHuffman (engine index; no M32 layer)
-        from gridfour_spark import canonhuffman as _ch
+    """Inverse of encode_tile: byte 0 names the codec through CODECS."""
+    if packing[0] >= len(CODECS):
+        raise ValueError(f"unknown engine codec index {packing[0]}")
+    return decode_packing(CODECS[packing[0]], packing, nr, nc)
 
-        return _ch.decode_tile(packing, nr, nc)
-    if codec == 1:  # LSOP-12/8, legacy or revised header (canonical residuals
-        # win more races since round 5, so the generic inverse must dispatch it)
-        from gridfour_spark import lsop as _l
 
-        return _l.decode_lsop_any(packing, nr, nc)
+def decode_packing(codec: str, packing: bytes, nr: int, nc: int) -> np.ndarray:
+    """One decoder per reference codec name (CodecMaster.decode:195-202) for
+    engine frames and GVRS files alike -> (nr, nc) cells: integers, or
+    float32 for GvrsFloat. A corrupt packing raises ValueError."""
+    try:
+        if codec in ("GvrsDeflate", "GvrsHuffman", "Huffman"):
+            v = _decode_m32_packing(codec, packing, nr, nc)
+        elif codec in ("LSOP12", "LSOP08"):
+            from gridfour_spark import lsop as _l
+
+            v = _l.decode_lsop(packing, nr, nc)
+        elif codec == "GvrsCanonicalHuffman":
+            from gridfour_spark import canonhuffman as _ch
+
+            v = _ch.decode_tile(packing, nr, nc)
+        elif codec == "GvrsFloat":
+            from gridfour_spark import floatcodec as _fc
+
+            v = _fc.decode_float_tile(packing, nr, nc)
+        else:
+            raise NotImplementedError(f"codec {codec!r} is not supported")
+    except (zlib.error, IndexError) as exc:
+        # a Deflate stream or a header byte read that runs past the packing
+        raise ValueError(f"corrupt {codec} packing: {exc}") from exc
+    return v.reshape(nr, nc)
+
+
+def _decode_m32_packing(codec: str, packing: bytes, nr: int, nc: int) -> np.ndarray:
+    """[codec][predictor][seed i32 LE][nM32 i32 LE][body]: the body codes the
+    M32 bytes with Deflate (CodecDeflate.decode:109-152), GVRS tree-in-stream
+    Huffman (CodecHuffman) or the engine's length-limited Huffman."""
+    if len(packing) < 10:
+        raise ValueError(f"{codec} packing of {len(packing)} bytes has no header")
     ptype = packing[1]
     seed = int.from_bytes(packing[2:6], "little", signed=True)
     n_m32 = int.from_bytes(packing[6:10], "little")
-    if codec == CODEC_DEFLATE_INDEX:
-        m32 = zlib.decompress(packing[10:])
-    else:
+    body = packing[10:]
+    if codec == "GvrsDeflate":
+        m32 = zlib.decompress(body)
+    elif codec == "GvrsHuffman":
         from gridfour_spark import gvrshuffman as _g
+
+        m32 = _g.decode(8 * len(body), body, n_m32)
+    else:
         from gridfour_spark import huffman as _h
 
-        if codec == _g.GVRS_HUFFMAN_CODEC_INDEX:
-            gb = int.from_bytes(packing[10:14], "little")
-            m32 = _g.decode(gb, packing[14:], n_m32)
-        else:
-            assert codec == _h.HUFFMAN_CODEC_INDEX, codec
-            m32 = _h.huff_decode(packing[10:])
-    assert len(m32) == n_m32, (len(m32), n_m32)
-    syms = m32_decode(m32, n_symbols_for(ptype, nr, nc))
+        m32 = _h.huff_decode(body)
+    if len(m32) != n_m32:
+        raise ValueError(f"{codec} packing holds {len(m32)} M32 bytes, header says {n_m32}")
+    return unpredict(ptype, seed, m32_decode(m32, n_symbols_for(ptype, nr, nc)), nr, nc)
+
+
+def unpredict(ptype: int, seed: int, syms: np.ndarray, nr: int, nc: int) -> np.ndarray:
+    """Residual symbols -> cells through predictor `ptype`'s inverse."""
+    if ptype not in ALL_PREDICTORS:
+        raise ValueError(f"unknown predictor {ptype}")
     return ALL_PREDICTORS[ptype][1](seed, syms, nr, nc)
 
 

@@ -19,7 +19,9 @@ import zlib
 
 import numpy as np
 
-FLOAT_CODEC_INDEX = 2
+from gridfour_spark.compress import CODECS
+
+FLOAT_CODEC_INDEX = CODECS.index("GvrsFloat")
 
 
 def _delta_encode(plane: np.ndarray) -> np.ndarray:
@@ -65,15 +67,12 @@ def encode_float_tile(values: np.ndarray, nr: int, nc: int) -> bytes:
     return bytes(out)
 
 
-def decode_float_tile(packing: bytes, nr: int, nc: int, check_index: bool = True) -> np.ndarray:
+def decode_float_tile(packing: bytes, nr: int, nc: int) -> np.ndarray:
     """Inverse of encode_float_tile; byte-compatible with the reference's
-    CodecFloat payloads (decodeFloats:395-457), so this is ALSO the decoder
-    gvrsfile uses for reference-written float tiles (check_index=False skips
-    the engine codec-table assertion — reference files use their own codec
-    list). Sections may be over-allocated in foreign payloads; every plane
-    is clipped to n = nr*nc."""
-    if check_index:
-        assert packing[0] == FLOAT_CODEC_INDEX
+    CodecFloat payloads (decodeFloats:395-457), so compress.decode_packing
+    decodes GvrsFloat tiles of engine frames and GVRS files with it. Byte 0
+    (the codec index) is the caller's. Sections may be over-allocated in
+    foreign payloads; every plane is clipped to n = nr*nc."""
     pos = 2
     sections = []
     for _ in range(5):

@@ -28,7 +28,6 @@ from __future__ import annotations
 import dataclasses
 import os
 import struct
-import zlib
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -477,154 +476,6 @@ def read_metadata(path: str, info: GvrsInfo | None = None) -> list[dict]:
 
 # --- tile payload decode ------------------------------------------------------
 
-def _decode_int_payload(payload: bytes, codec_ids: list, nr: int, nc: int) -> np.ndarray:
-    """Dispatch a compressed integer packing by codec id (CodecMaster.decode)."""
-    from gridfour_spark import compress as C
-    from gridfour_spark import gvrshuffman as GH
-
-    codec = codec_ids[payload[0]]
-    if codec == "GvrsDeflate":
-        ptype = payload[1]
-        seed = int.from_bytes(payload[2:6], "little", signed=True)
-        n_m32 = int.from_bytes(payload[6:10], "little")
-        m32 = zlib.decompress(payload[10:])
-        assert len(m32) == n_m32, (len(m32), n_m32)
-        syms = C.m32_decode(m32, C.n_symbols_for(ptype, nr, nc))
-        return C.ALL_PREDICTORS[ptype][1](seed, syms, nr, nc)
-    if codec == "GvrsHuffman":
-        ptype = payload[1]
-        seed = int.from_bytes(payload[2:6], "little", signed=True)
-        n_m32 = int.from_bytes(payload[6:10], "little")
-        m32 = GH.decode((len(payload) - 10) * 8, payload[10:], n_m32)
-        syms = C.m32_decode(m32, C.n_symbols_for(ptype, nr, nc))
-        return C.ALL_PREDICTORS[ptype][1](seed, syms, nr, nc)
-    if codec in ("LSOP12", "LSOP08"):
-        return decode_lsop_reference(payload, nr, nc)
-    if codec == "GvrsCanonicalHuffman":
-        return _decode_canon_huffman_tile(payload, nr, nc)
-    raise NotImplementedError(f"codec {codec!r} not supported for int tiles")
-
-
-def _decode_float_payload(payload: bytes, codec_ids: list, nr: int, nc: int) -> np.ndarray:
-    codec = codec_ids[payload[0]]
-    if codec != "GvrsFloat":
-        raise NotImplementedError(f"codec {codec!r} not supported for float tiles")
-    return decode_float_reference(payload, nr, nc)
-
-
-def decode_float_reference(packing: bytes, nr: int, nc: int) -> np.ndarray:
-    """Reference-format float tile decode — delegates to the shared
-    floatcodec kernel (byte-identical format; CodecFloat.decodeFloats:
-    395-457). Kept as a named entry point for the codec dispatch table."""
-    from gridfour_spark.floatcodec import decode_float_tile
-
-    return decode_float_tile(packing, nr, nc, check_index=False).ravel()
-
-
-def parse_ls_header(packing: bytes, offset: int = 0) -> dict:
-    """LsHeader.java:104-190 — legacy and revised layouts."""
-    pos = offset
-    codec_index = packing[pos]; pos += 1
-    flags = packing[pos]
-    out: dict = {"codec_index": codec_index}
-    if flags & 0x40:  # revised format
-        comp_type = flags & 0x0F
-        has_checksum = bool(flags & 0x80)
-        pos += 1
-        n_coeff = packing[pos]; pos += 1
-        out["seed"] = int.from_bytes(packing[pos : pos + 4], "little", signed=True); pos += 4
-        out["u"] = np.frombuffer(packing[pos : pos + 4 * n_coeff], dtype="<f4"); pos += 4 * n_coeff
-        if comp_type == 2:  # canonical huffman: counts are implicit
-            out["n_init"] = 0
-            out["n_interior"] = 0
-        else:
-            out["n_init"] = int.from_bytes(packing[pos : pos + 4], "little"); pos += 4
-            out["n_interior"] = int.from_bytes(packing[pos : pos + 4], "little"); pos += 4
-        if has_checksum:
-            out["checksum"] = int.from_bytes(packing[pos : pos + 4], "little"); pos += 4
-    else:  # legacy format
-        n_coeff = flags; pos += 1
-        out["seed"] = int.from_bytes(packing[pos : pos + 4], "little", signed=True); pos += 4
-        out["u"] = np.frombuffer(packing[pos : pos + 4 * n_coeff], dtype="<f4"); pos += 4 * n_coeff
-        out["n_init"] = int.from_bytes(packing[pos : pos + 4], "little"); pos += 4
-        out["n_interior"] = int.from_bytes(packing[pos : pos + 4], "little"); pos += 4
-        method = packing[pos]; pos += 1
-        comp_type = method & 0x0F
-        if method & 0x80:
-            out["checksum"] = int.from_bytes(packing[pos : pos + 4], "little"); pos += 4
-    out["n_coeff"] = n_coeff
-    out["comp_type"] = comp_type  # 0 huffman, 1 deflate, 2 canonical huffman
-    out["header_size"] = pos - offset
-    return out
-
-
-def decode_lsop_reference(payload: bytes, nr: int, nc: int) -> np.ndarray:
-    """Decode a reference-format LSOP packing (either header layout, deflate or
-    GVRS-Huffman residuals) with the engine's wavefront kernels."""
-    from gridfour_spark import gvrshuffman as GH
-    from gridfour_spark import lsop as L
-    from gridfour_spark.compress import m32_decode
-
-    h = parse_ls_header(payload)
-    n_coeff = h["n_coeff"]
-    body = payload[h["header_size"]:]
-    if n_coeff == 12:
-        n_init_syms = 4 * nr + 2 * nc - 9
-        n_interior_syms = (nr - 2) * (nc - 4)
-        core = L.decode_lsop_parsed
-    elif n_coeff == 8:
-        # LsDecoder08.unpackInitializers: (nc-1) + nc + 2*(nr-2) symbols;
-        # unpackInterior: rows 2..nr-1 x cols 2..nc-1
-        n_init_syms = 2 * nr + 2 * nc - 5
-        n_interior_syms = (nr - 2) * (nc - 2)
-        core = L.decode_lsop8_parsed
-    else:
-        raise NotImplementedError(f"LSOP with {n_coeff} coefficients")
-
-    if h["comp_type"] == 1:  # deflate: two concatenated streams
-        d = zlib.decompressobj()
-        init_m32 = d.decompress(body)
-        interior_m32 = zlib.decompress(d.unused_data)
-        assert len(init_m32) == h["n_init"] and len(interior_m32) == h["n_interior"]
-    elif h["comp_type"] == 0:
-        # GVRS tree-in-stream Huffman: TWO sequences decoded back to back from
-        # one bit store (LsDecoder12.decode:123-128)
-        bits = np.unpackbits(np.frombuffer(body, dtype=np.uint8), bitorder="little")
-        init_m32, p = GH.decode_stream(bits, 0, h["n_init"])
-        interior_m32, _ = GH.decode_stream(bits, p, h["n_interior"])
-    else:
-        # comp_type=2, canonical Huffman (LsDecoder12.decode:107-117): the
-        # residuals are coded DIRECTLY as integer symbols — two
-        # CanonicalHuffman blocks back to back in one bit store, no M32
-        # layer (the int[] overloads of unpackInitializers/unpackInterior,
-        # LsDecoder12.java:203-246,355+ — same arithmetic as the byte
-        # variants with packing[k++] in place of m32.decode())
-        from gridfour_spark import canonhuffman as CH
-
-        bits = np.unpackbits(np.frombuffer(body, dtype=np.uint8), bitorder="little")
-        init, p = CH.decode_block(bits, 0, n_init_syms)
-        interior, _ = CH.decode_block(bits, p, n_interior_syms)
-        if init.size < n_init_syms:
-            init = np.concatenate([init, np.zeros(n_init_syms - init.size, dtype=np.int64)])
-        if interior.size < n_interior_syms:
-            interior = np.concatenate(
-                [interior, np.zeros(n_interior_syms - interior.size, dtype=np.int64)]
-            )
-        return core(h["seed"], np.asarray(h["u"]), init, interior, nr, nc).ravel()
-
-    init = m32_decode(init_m32, n_init_syms).astype(np.int64)
-    interior = m32_decode(interior_m32, n_interior_syms).astype(np.int64)
-    return core(h["seed"], np.asarray(h["u"]), init, interior, nr, nc).ravel()
-
-
-def _decode_canon_huffman_tile(payload: bytes, nr: int, nc: int) -> np.ndarray:
-    """GvrsCanonicalHuffman standalone tile (round-4 verdict missing #1) —
-    dispatch to the shared canonical-Huffman kernel."""
-    from gridfour_spark import canonhuffman as CH
-
-    return CH.decode_tile(payload, nr, nc)
-
-
 def tile_payload_sizes(path: str, info: GvrsInfo) -> dict:
     """Per-tile on-disk payload sizes: {tile_index: [n_bytes per element]}.
 
@@ -645,6 +496,9 @@ def tile_payload_sizes(path: str, info: GvrsInfo) -> dict:
     return out
 
 
+_RAW_DTYPES = {"short": "<i2", "int": "<i4", "icf": "<i4", "float": "<f4"}
+
+
 def read_tile_arrays(path: str, info: GvrsInfo, tile_indexes, positions=None) -> list:
     """Decode tile records for the given tile indexes. Returns a list of
     (tile_index, [per-element float64 arrays with NaN nulls]).
@@ -653,6 +507,8 @@ def read_tile_arrays(path: str, info: GvrsInfo, tile_indexes, positions=None) ->
     ``positions`` (tile_index -> content pos) overrides info.tile_positions,
     letting callers pass directory rows they already hold (the bounded-open
     path ships positions in the dataframe, not the broadcast header)."""
+    from gridfour_spark import compress as C
+
     out = []
     nr, nc = info.tile_rows, info.tile_cols
     n_cells = nr * nc
@@ -668,38 +524,27 @@ def read_tile_arrays(path: str, info: GvrsInfo, tile_indexes, positions=None) ->
             for e in info.elements:
                 n = struct.unpack("<i", f.read(4))[0]
                 payload = f.read(n)
-                std = info.standard_size_for(e)
-                if e.etype == "short":
-                    if n == std:
-                        ints = np.frombuffer(payload, dtype="<i2")[:n_cells].astype(np.int64)
-                    else:
-                        ints = _decode_int_payload(payload, info.codec_ids, nr, nc).astype(np.int64)
-                    vals = ints.astype(np.float64)
-                    vals[ints == int(e.fill)] = np.nan
-                elif e.etype == "int":
-                    if n == std:
-                        ints = np.frombuffer(payload, dtype="<i4").astype(np.int64)
-                    else:
-                        ints = _decode_int_payload(payload, info.codec_ids, nr, nc).astype(np.int64)
-                    vals = ints.astype(np.float64)
-                    vals[ints == int(e.fill)] = np.nan
-                elif e.etype == "icf":
-                    if n == std:
-                        ints = np.frombuffer(payload, dtype="<i4").astype(np.int64)
-                    else:
-                        ints = _decode_int_payload(payload, info.codec_ids, nr, nc).astype(np.int64)
-                    # GvrsElementIntCodedFloat decode: v = i/scale + offset (float32)
-                    vals = (ints.astype(np.float64) / e.scale + e.offset).astype(np.float32).astype(np.float64)
-                    vals[ints == e.i_fill] = np.nan
-                else:  # float
-                    if n == std:
-                        fl = np.frombuffer(payload, dtype="<f4")
-                    else:
-                        fl = _decode_float_payload(payload, info.codec_ids, nr, nc)
-                    vals = fl.astype(np.float64)
+                if n == info.standard_size_for(e):  # raw (shorts padded to 4)
+                    raw = np.frombuffer(payload, dtype=_RAW_DTYPES[e.etype])[:n_cells]
+                else:  # byte 0 indexes the file's codec list
+                    codec = info.codec_ids[payload[0]]
+                    if (codec == "GvrsFloat") != (e.etype == "float"):
+                        raise ValueError(f"tile {tile_index}: codec {codec} for a {e.etype} element")
+                    raw = C.decode_packing(codec, payload, nr, nc).ravel()
+                if e.etype == "float":
+                    vals = raw.astype(np.float64)
                     if not np.isnan(e.fill):
-                        vals[fl == np.float32(e.fill)] = np.nan
-                arrays.append(np.asarray(vals).ravel())
+                        vals[raw == np.float32(e.fill)] = np.nan
+                else:
+                    ints = raw.astype(np.int64)
+                    if e.etype == "icf":
+                        # GvrsElementIntCodedFloat decode: v = i/scale + offset (float32)
+                        vals = (ints / e.scale + e.offset).astype(np.float32).astype(np.float64)
+                        vals[ints == e.i_fill] = np.nan
+                    else:
+                        vals = ints.astype(np.float64)
+                        vals[ints == int(e.fill)] = np.nan
+                arrays.append(vals)
             out.append((int(tile_index), arrays))
     return out
 
@@ -951,9 +796,9 @@ def gvrs_cells(
 # export codec table: FILE index order is the reference's DEFAULT codec list
 # (GvrsFileSpecification ctor order Huffman, Deflate, Float, CanonHuffman)
 # + LSOP12, so the payload indexes work even if a reader ignores the
-# GvrsJavaCodecs metadata. Engine kernel indexes are remapped at encode time.
+# GvrsJavaCodecs metadata. An engine packing exports by rewriting byte 0 from
+# its compress.CODECS index to the index of the same name here.
 _EXPORT_CODECS = ["GvrsHuffman", "GvrsDeflate", "GvrsFloat", "GvrsCanonicalHuffman", "LSOP12"]
-_ENGINE_TO_EXPORT = {4: 0, 0: 1, 2: 2, 5: 3, 1: 4}  # gvrshuffman, deflate, float, canon, lsop
 # NOTE the trailing newline: CodecSpecification.specificationStringParse
 # only commits a spec line when it sees '\n', so an unterminated last line
 # is silently dropped (and the codec indexes shift at decode time)
@@ -1055,15 +900,8 @@ def encode_tile_payload(
     else:
         std = ints.astype("<i4").tobytes()
     if compress and r["kept"] and r["n_bytes"] < len(std):
-        p = bytearray(bytes(r["payload"]))
-        if p[0] == 4:
-            # engine GvrsHuffman payloads carry a 4-byte bit
-            # count at offset 10 that the reference format
-            # does not have (CodecHuffman reads tree bits
-            # from byte 10) — strip it on export
-            p = p[:10] + p[14:]
-        p[0] = _ENGINE_TO_EXPORT[bytes(r["payload"])[0]]
-        return bytes(p)
+        p = bytes(r["payload"])
+        return bytes([_EXPORT_CODECS.index(C.CODECS[p[0]])]) + p[1:]
     return std
 
 

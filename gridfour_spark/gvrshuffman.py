@@ -19,13 +19,18 @@ generated from the compiled reference classes (tests/test_gvrshuffman.py).
 The canonical length-limited codec in huffman.py remains the default race
 member (its 2^16 table decode is faster); this module exists for format
 parity and is raced opt-in (compress.encode_tile(use_gvrs_huffman=True)).
+A GvrsHuffman tile packing, in engine frames and files alike, is the
+CodecHuffman layout: the 10-byte M32 header, then this bitstream with no
+bit count, so decode_stream stops after n_symbols.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-GVRS_HUFFMAN_CODEC_INDEX = 4
+from gridfour_spark.compress import CODECS, _orbit
+
+GVRS_HUFFMAN_CODEC_INDEX = CODECS.index("GvrsHuffman")
 
 
 def _build_tree(counts: np.ndarray):
@@ -132,12 +137,16 @@ def decode_stream(bits: np.ndarray, start: int, n_symbols: int) -> tuple[bytes, 
     """Decode one Huffman-coded sequence starting at bit ``start`` of an
     LSB-first unpacked bit array; returns (symbols, next-bit position). The
     reference decodes several sequences from ONE BitInputStore back to back
-    (LsDecoder12.decode:123-128), so the caller needs the resume position."""
+    (LsDecoder12.decode:123-128), so the caller needs the resume position.
+    A stream that ends before n_symbols raises ValueError."""
     bits = bits[start:]
+    if len(bits) < 17:
+        raise ValueError("Huffman stream too short for a tree")
     n_leaves = int(bits[:8] @ (1 << np.arange(8))) + 1
     pos = 8
     if n_leaves == 1:
-        assert bits[pos] == 1
+        if bits[pos] != 1:
+            raise ValueError("corrupt single-leaf Huffman tree")
         sym = int(bits[pos + 1 : pos + 9] @ (1 << np.arange(8)))
         return bytes([sym]) * n_symbols, start + pos + 9
 
@@ -146,6 +155,8 @@ def decode_stream(bits: np.ndarray, start: int, n_symbols: int) -> tuple[bytes, 
     stack: list[list[int]] = [[]]
     while stack:
         path = stack.pop()
+        if pos + 9 > len(bits):
+            raise ValueError("Huffman tree runs past the end of the stream")
         flag = int(bits[pos]); pos += 1
         if flag:
             sym = int(bits[pos : pos + 8] @ (1 << np.arange(8))); pos += 8
@@ -175,14 +186,16 @@ def decode_stream(bits: np.ndarray, start: int, n_symbols: int) -> tuple[bytes, 
         w = np.lib.stride_tricks.sliding_window_view(padded, 16)[: len(text)] @ (
             np.int64(1) << np.arange(16)
         )
-        from gridfour_spark.compress import _orbit
-
         nxt = np.append(
             np.minimum(np.arange(len(text), dtype=np.int64) + table_len[w], len(text)),
             len(text),
         )
         starts = _orbit(nxt, n_symbols)
+        if starts[-1] >= len(text):  # the walk reached the end's fixed point
+            raise ValueError("Huffman text ends before n_symbols")
         end = int(starts[-1]) + int(table_len[w[starts[-1]]])
+        if end > len(text):
+            raise ValueError("Huffman text ends before n_symbols")
         return table_sym[w[starts]].tobytes(), start + pos + end
 
     # deep-tree fallback: sequential walk (rare; fibonacci-like counts only)
@@ -197,6 +210,8 @@ def decode_stream(bits: np.ndarray, start: int, n_symbols: int) -> tuple[bytes, 
     for i in range(n_symbols):
         node = root
         while "sym" not in node:
+            if p >= len(text):
+                raise ValueError("Huffman text ends before n_symbols")
             node = node[int(text[p])]
             p += 1
         out[i] = node["sym"]

@@ -30,7 +30,9 @@ import zlib
 
 import numpy as np
 
-HUFFMAN_CODEC_INDEX = 3
+from gridfour_spark.compress import CODECS, _orbit
+
+HUFFMAN_CODEC_INDEX = CODECS.index("Huffman")
 MAX_CODE_LEN = 16  # enables the single-level decode table (2^16 entries)
 
 
@@ -123,7 +125,8 @@ def _decode_tables(lengths: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     table_len = np.repeat(lens.astype(np.uint8), spans)
     # sanity: complete canonical tree fills the table exactly
     base = (codes[syms].astype(np.int64) << (MAX_CODE_LEN - lens))[0] if len(order) else 0
-    assert len(table_sym) == (1 << MAX_CODE_LEN) and base == 0, "corrupt length table"
+    if len(table_sym) != (1 << MAX_CODE_LEN) or base != 0:
+        raise ValueError("corrupt Huffman length table")
     return table_sym, table_len
 
 
@@ -169,8 +172,6 @@ def huff_decode(packed: bytes) -> bytes:
     """Vectorized table-driven decode: sliding 16-bit windows over the
     bitstream, symbol length per position from the canonical table, then
     pointer doubling recovers the symbol start positions."""
-    from gridfour_spark.compress import _orbit
-
     tlen = int.from_bytes(packed[0:2], "little")
     lengths = np.frombuffer(zlib.decompress(packed[2 : 2 + tlen]), dtype=np.uint8)
     pos = 2 + tlen

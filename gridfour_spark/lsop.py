@@ -21,7 +21,11 @@ Re-expression of the reference encoder (lsop/LsOptimalPredictor12.java):
 - packing: legacy LsHeader layout (lsop/LsHeader.java:104-133):
   [codecIndex][n=12][seed int32 LE][12 x float32 LE][nInitCodes int32]
   [nInteriorCodes int32][method: 1=deflate] + deflate(init M32) +
-  deflate(interior M32).
+  deflate(interior M32), or the revised layout with canonical-Huffman
+  residuals when that is smaller (encode_lsop).
+- decode: decode_lsop is the one LSOP decoder, for engine frames and GVRS
+  files alike — either LsHeader layout (parse_ls_header), 12 or 8
+  coefficients, Deflate, GVRS-Huffman or canonical residuals.
 
 Grids smaller than 6x6 are not encodable (reference returns null, :114-116).
 """
@@ -32,9 +36,11 @@ import zlib
 
 import numpy as np
 
-from gridfour_spark.compress import m32_decode, m32_encode
+from gridfour_spark import canonhuffman as CH
+from gridfour_spark import gvrshuffman as GH
+from gridfour_spark.compress import CODECS, m32_decode, m32_encode
 
-LSOP_CODEC_INDEX = 1
+LSOP_CODEC_INDEX = CODECS.index("LSOP12")
 _F32 = np.float32
 
 
@@ -161,8 +167,6 @@ def encode_lsop(
         # mirror it: the canonical form codes the residual INTEGERS
         # directly (no M32 layer) in the revised header layout with
         # implicit counts (LsHeader.packHeader:220-244 — 55-byte header)
-        from gridfour_spark import canonhuffman as CH
-
         w = CH._BitWriter()
         CH.encode_block(np.asarray(init_syms, dtype=np.int64), w)
         CH.encode_block(interior.astype(np.int64), w)
@@ -191,45 +195,96 @@ _STENCIL = [
 ]
 
 
-def _parse_lsop(payload: bytes, nr: int, nc: int):
-    if payload[1] & 0x40:
-        # revised header (canonical-Huffman residuals, LsHeader.java:66-73):
-        # two canonical blocks of the residual INTEGERS, no M32 layer
-        from gridfour_spark import canonhuffman as CH
-        from gridfour_spark.gvrsfile import parse_ls_header
-
-        h = parse_ls_header(payload)
-        assert h["n_coeff"] == 12 and h["comp_type"] == 2
-        bits = np.unpackbits(
-            np.frombuffer(payload[h["header_size"]:], dtype=np.uint8),
-            bitorder="little",
-        )
-        n_init = 4 * nr + 2 * nc - 9
-        n_int = (nr - 2) * (nc - 4)
-        init, p = CH.decode_block(bits, 0, n_init)
-        interior, _ = CH.decode_block(bits, p, n_int)
-        if init.size < n_init:
-            init = np.concatenate([init, np.zeros(n_init - init.size, np.int64)])
-        if interior.size < n_int:
-            interior = np.concatenate([interior, np.zeros(n_int - interior.size, np.int64)])
-        return h["seed"], np.asarray(h["u"]), init, interior
-    assert payload[0] == LSOP_CODEC_INDEX and payload[1] == 12
-    seed = int.from_bytes(payload[2:6], "little", signed=True)
-    u = np.frombuffer(payload[6:54], dtype="<f4")
-    n_init = int.from_bytes(payload[54:58], "little")
-    n_interior = int.from_bytes(payload[58:62], "little")
-    assert payload[62] == 1
-    d = zlib.decompressobj()
-    init_m32 = d.decompress(payload[63:])
-    interior_m32 = zlib.decompress(d.unused_data)
-    assert len(init_m32) == n_init and len(interior_m32) == n_interior
-    init = m32_decode(init_m32, 4 * nr + 2 * nc - 9).astype(np.int64)
-    interior = m32_decode(interior_m32, (nr - 2) * (nc - 4)).astype(np.int64)
-    return seed, u, init, interior
+def parse_ls_header(packing: bytes) -> dict:
+    """LsHeader.java:104-190 — legacy and revised layouts."""
+    pos = 1  # byte 0 is the codec index
+    flags = packing[pos]
+    out: dict = {}
+    if flags & 0x40:  # revised format
+        comp_type = flags & 0x0F
+        has_checksum = bool(flags & 0x80)
+        pos += 1
+        n_coeff = packing[pos]; pos += 1
+        out["seed"] = int.from_bytes(packing[pos : pos + 4], "little", signed=True); pos += 4
+        out["u"] = np.frombuffer(packing[pos : pos + 4 * n_coeff], dtype="<f4"); pos += 4 * n_coeff
+        if comp_type == 2:  # canonical huffman: counts are implicit
+            out["n_init"] = 0
+            out["n_interior"] = 0
+        else:
+            out["n_init"] = int.from_bytes(packing[pos : pos + 4], "little"); pos += 4
+            out["n_interior"] = int.from_bytes(packing[pos : pos + 4], "little"); pos += 4
+        if has_checksum:
+            out["checksum"] = int.from_bytes(packing[pos : pos + 4], "little"); pos += 4
+    else:  # legacy format
+        n_coeff = flags; pos += 1
+        out["seed"] = int.from_bytes(packing[pos : pos + 4], "little", signed=True); pos += 4
+        out["u"] = np.frombuffer(packing[pos : pos + 4 * n_coeff], dtype="<f4"); pos += 4 * n_coeff
+        out["n_init"] = int.from_bytes(packing[pos : pos + 4], "little"); pos += 4
+        out["n_interior"] = int.from_bytes(packing[pos : pos + 4], "little"); pos += 4
+        method = packing[pos]; pos += 1
+        comp_type = method & 0x0F
+        if method & 0x80:
+            out["checksum"] = int.from_bytes(packing[pos : pos + 4], "little"); pos += 4
+    out["n_coeff"] = n_coeff
+    out["comp_type"] = comp_type  # 0 huffman, 1 deflate, 2 canonical huffman
+    out["header_size"] = pos
+    return out
 
 
 def decode_lsop(payload: bytes, nr: int, nc: int) -> np.ndarray:
-    """Wavefront-vectorized LSOP decode.
+    """Decode an LSOP packing (LsDecoder12/LsDecoder08.decode): either header
+    layout, 12 or 8 coefficients, and Deflate, GVRS-Huffman or canonical
+    residuals. A corrupt packing raises ValueError (zlib.error for a broken
+    Deflate stream)."""
+    h = parse_ls_header(payload)
+    if len(payload) < h["header_size"]:
+        raise ValueError(f"LSOP packing of {len(payload)} bytes has no header")
+    if h["n_coeff"] == 12:
+        n_init, n_interior, core = 4 * nr + 2 * nc - 9, (nr - 2) * (nc - 4), decode_lsop_parsed
+    elif h["n_coeff"] == 8:
+        # LsDecoder08.unpackInitializers: (nc-1) + nc + 2*(nr-2) symbols;
+        # unpackInterior: rows 2..nr-1 x cols 2..nc-1
+        n_init, n_interior, core = 2 * nr + 2 * nc - 5, (nr - 2) * (nc - 2), decode_lsop8_parsed
+    else:
+        raise ValueError(f"LSOP packing with {h['n_coeff']} coefficients")
+    body = payload[h["header_size"]:]
+    if h["comp_type"] == 2:
+        # canonical Huffman (LsDecoder12.decode:107-117): the residual
+        # INTEGERS themselves, two blocks back to back, no M32 layer; the
+        # reference pre-zeroes its arrays, so a block that ends early leaves
+        # trailing zeros
+        init, p = CH.decode_block(body, 0, n_init)
+        interior, _ = CH.decode_block(body, p, n_interior)
+        init = np.pad(init, (0, n_init - init.size))
+        interior = np.pad(interior, (0, n_interior - interior.size))
+        return core(h["seed"], h["u"], init, interior, nr, nc)
+    if h["comp_type"] == 1:  # deflate: two concatenated streams
+        d = zlib.decompressobj()
+        init_m32 = d.decompress(body)
+        interior_m32 = zlib.decompress(d.unused_data)
+    elif h["comp_type"] == 0:
+        # GVRS tree-in-stream Huffman: TWO sequences decoded back to back from
+        # one bit store (LsDecoder12.decode:123-128)
+        bits = np.unpackbits(np.frombuffer(body, dtype=np.uint8), bitorder="little")
+        init_m32, p = GH.decode_stream(bits, 0, h["n_init"])
+        interior_m32, _ = GH.decode_stream(bits, p, h["n_interior"])
+    else:
+        raise ValueError(f"LSOP packing with residual coding {h['comp_type']}")
+    if (len(init_m32), len(interior_m32)) != (h["n_init"], h["n_interior"]):
+        raise ValueError(
+            f"LSOP streams hold {len(init_m32)}/{len(interior_m32)} M32 bytes, "
+            f"header says {h['n_init']}/{h['n_interior']}"
+        )
+    init = m32_decode(init_m32, n_init)
+    interior = m32_decode(interior_m32, n_interior)
+    return core(h["seed"], h["u"], init, interior, nr, nc)
+
+
+def decode_lsop_parsed(
+    seed: int, u: np.ndarray, init: np.ndarray, interior: np.ndarray, nr: int, nc: int
+) -> np.ndarray:
+    """Core wavefront decode over already-parsed header arrays
+    (LsDecoder12.java:98-148).
 
     The interior recurrence reads (r, c-1..c-2), (r-1, c-2..c+2) and
     (r-2, c-2..c+2): every dependency of cell (r, c) has a strictly smaller
@@ -238,16 +293,6 @@ def decode_lsop(payload: bytes, nr: int, nc: int) -> np.ndarray:
     instead of nr*nc Python iterations. Per-cell float32 accumulation order
     is unchanged (u0*z0, +u1*z1, ...), so results are bit-identical to the
     strictfp reference (LsOptimalPredictor12.java:252-281)."""
-    seed, u, init, interior = _parse_lsop(payload, nr, nc)
-    return decode_lsop_parsed(seed, u, init, interior, nr, nc)
-
-
-def decode_lsop_parsed(
-    seed: int, u: np.ndarray, init: np.ndarray, interior: np.ndarray, nr: int, nc: int
-) -> np.ndarray:
-    """Core wavefront decode over already-parsed header arrays — shared by the
-    engine's own store payloads and the reference-format reader (gvrsfile.py,
-    LsDecoder12.java:98-148)."""
     init = np.asarray(init, dtype=np.int64)
     interior = np.asarray(interior, dtype=np.int64)
     v = np.zeros((nr, nc), dtype=np.int64)
@@ -332,7 +377,8 @@ def _wavefronts(nr: int, nc: int) -> list:
 # ---------------------------------------------------------------------------
 # LSOP-8: the 8-coefficient variant (lsop/LsOptimalPredictor08.java,
 # LsDecoder08.java). The reference ships it DISABLED (LsCodecUtility.java:73
-# comments out its registration), so it stays opt-in here too.
+# comments out its registration), so the engine never races it; decode_lsop
+# reads it from files, and encode_lsop8 is the test oracle of that decode.
 # Differences from LSOP-12: initialization is plain differencing over row 0,
 # row 1 and the first TWO columns (no triangle rows, no trailing columns);
 # the 8-neighbor stencil has NO forward references, so the interior
@@ -426,24 +472,6 @@ def encode_lsop8(values: np.ndarray, nr: int, nc: int) -> dict | None:
     return {"predictor": 8, "payload": payload, "n_bytes": len(payload)}
 
 
-def decode_lsop8(payload: bytes, nr: int, nc: int) -> np.ndarray:
-    """Wavefront decode (LsDecoder08.unpackInitializers/unpackInterior):
-    every stencil dependency of (r, c) has a strictly smaller r + c."""
-    assert payload[0] == LSOP_CODEC_INDEX and payload[1] == 8
-    seed = int.from_bytes(payload[2:6], "little", signed=True)
-    u = np.frombuffer(payload[6:38], dtype="<f4")
-    n_init = int.from_bytes(payload[38:42], "little")
-    n_interior = int.from_bytes(payload[42:46], "little")
-    assert payload[46] == 1
-    d = zlib.decompressobj()
-    init_m32 = d.decompress(payload[47:])
-    interior_m32 = zlib.decompress(d.unused_data)
-    assert len(init_m32) == n_init and len(interior_m32) == n_interior
-    init = m32_decode(init_m32, 2 * nr + 2 * nc - 5).astype(np.int64)
-    interior = m32_decode(interior_m32, (nr - 2) * (nc - 2)).astype(np.int64)
-    return decode_lsop8_parsed(seed, u, init, interior, nr, nc)
-
-
 def decode_lsop8_parsed(
     seed: int, u: np.ndarray, init: np.ndarray, interior: np.ndarray, nr: int, nc: int
 ) -> np.ndarray:
@@ -481,16 +509,3 @@ def decode_lsop8_parsed(
         vflat[base] = got
         vf[base] = got
     return v.astype(np.int32)
-
-
-def decode_lsop_any(payload: bytes, nr: int, nc: int) -> np.ndarray:
-    """Dispatch on the LsHeader second byte: legacy layout carries the
-    coefficient count there; bit 6 marks the revised layout (LsHeader.java
-    :104-190), including canonical-Huffman residual packings, which route
-    through the universal reference-format parser."""
-    b1 = payload[1]
-    if b1 & 0x40:  # revised header (e.g. canonical residuals)
-        from gridfour_spark.gvrsfile import decode_lsop_reference
-
-        return decode_lsop_reference(payload, nr, nc).reshape(nr, nc)
-    return decode_lsop8(payload, nr, nc) if b1 == 8 else decode_lsop(payload, nr, nc)

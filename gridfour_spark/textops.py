@@ -657,7 +657,7 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 64) -> DataFrame:
                 F.min("label").alias("label")
             )
             # pointer doubling: label <- label(label)
-            newL = (
+            newL = _checkpoint(
                 newL.alias("x")
                 .join(
                     newL.select(
@@ -670,7 +670,6 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 64) -> DataFrame:
                     F.col("x.doc_id"),
                     F.coalesce(F.col("_ll"), F.col("x.label")).alias("label"),
                 )
-                .localCheckpoint()
             )
             changed = (
                 newL.alias("n")
@@ -688,11 +687,10 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 64) -> DataFrame:
             links = L.filter(F.col("doc_id") != F.col("label")).select(
                 F.col("doc_id").alias("src"), F.col("label").alias("dst")
             )
-            newE = (
+            newE = _checkpoint(
                 E.unionByName(links)
                 .unionByName(links.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
                 .distinct()
-                .localCheckpoint()
             )
             _release(E)
             E = newE
@@ -728,6 +726,22 @@ def _release(df: DataFrame) -> None:
     plan = df._jdf.queryExecution().logical()
     if plan.nodeName() == "LogicalRDD":
         plan.rdd().unpersist(False)
+
+
+def _checkpoint(df: DataFrame) -> DataFrame:
+    """`df.localCheckpoint(eager=True)`, releasable with _release. Spark
+    persists the checkpoint RDD before its job runs, so when the job raises
+    no handle to that RDD reaches the caller: unpersist the RDDs the call
+    registered before re-raising."""
+    jsc = df.sparkSession.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    try:
+        return df.localCheckpoint(eager=True)
+    except BaseException:
+        for rid, rdd in jsc.getPersistentRDDs().items():
+            if rid not in before:
+                rdd.unpersist(False)
+        raise
 
 
 def dedup_clusters_sql(jaccard_threshold: float = 0.3, docs_src: str = "documents") -> str:
@@ -927,7 +941,7 @@ def bpe_train(
         rows = types_df.limit(_BPE_DRIVER_MAX_TYPES + 1).collect()
         if len(rows) > _BPE_DRIVER_MAX_TYPES:
             rows = None
-            st = ckpt = types_df.localCheckpoint(eager=True)
+            st = ckpt = _checkpoint(types_df)
     finally:
         types_df.unpersist()
     if rows is not None:
@@ -953,26 +967,30 @@ def bpe_train(
 
     merges = []
     since_ckpt = 0
-    for rank in range(n_merges):
-        best = (
-            _bpe_pair_counts(st)
-            .orderBy(F.desc("n"), F.asc("a"), F.asc("b"))
-            .limit(1)
-            .collect()
-        )
-        if not best:
-            break
-        a, b, n = best[0]["a"], best[0]["b"], int(best[0]["n"])
-        merges.append((rank, a, b, n))
-        st = st.withColumn(
-            "seq", F.replace(F.col("seq"), F.lit(f"<{a}><{b}>"), F.lit(f"<{a}{b}>"))
-        )
-        since_ckpt += 1
-        if since_ckpt >= _BPE_CKPT_EVERY:
-            new = st.localCheckpoint(eager=True)
-            _release(ckpt)  # superseded: the new checkpoint is materialized
-            st = ckpt = new
-            since_ckpt = 0
+    try:
+        for rank in range(n_merges):
+            best = (
+                _bpe_pair_counts(st)
+                .orderBy(F.desc("n"), F.asc("a"), F.asc("b"))
+                .limit(1)
+                .collect()
+            )
+            if not best:
+                break
+            a, b, n = best[0]["a"], best[0]["b"], int(best[0]["n"])
+            merges.append((rank, a, b, n))
+            st = st.withColumn(
+                "seq", F.replace(F.col("seq"), F.lit(f"<{a}><{b}>"), F.lit(f"<{a}{b}>"))
+            )
+            since_ckpt += 1
+            if since_ckpt >= _BPE_CKPT_EVERY:
+                new = _checkpoint(st)
+                _release(ckpt)  # superseded: the new checkpoint is materialized
+                st = ckpt = new
+                since_ckpt = 0
+    except BaseException:
+        _release(ckpt)  # the one checkpoint the returned frame would read
+        raise
     return merges, st
 
 

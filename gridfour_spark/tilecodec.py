@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from gridfour_spark import compress as C
 from gridfour_spark import floatcodec as FC
-from gridfour_spark import lsop as L
 from gridfour_spark.spec import GridSpec
 
 COMPRESSED_SCHEMA = (
@@ -79,9 +78,7 @@ def decompress_tiles(compressed: DataFrame, spec: GridSpec) -> DataFrame:
                 payload = bytes(row["payload"])
                 if row["codec"] == "raw":
                     v = np.frombuffer(payload, dtype=np.int32)
-                elif row["codec"] in ("lsop12", "lsop08"):
-                    v = L.decode_lsop_any(payload, nr, nc).ravel()
-                else:  # deflate/huffman/canonical: byte-0 dispatch
+                else:  # byte 0 names the codec
                     v = C.decode_tile(payload, nr, nc).ravel()
                 rows.append(
                     {
@@ -178,8 +175,6 @@ def decompress_tiles_multi(
                     pos += ln
                     if ln == standard:
                         v = np.frombuffer(data, dtype=np.int32)
-                    elif data[0] == L.LSOP_CODEC_INDEX:
-                        v = L.decode_lsop_any(data, nr, nc).ravel()
                     else:
                         v = C.decode_tile(data, nr, nc).ravel()
                     rows.append(

@@ -78,6 +78,39 @@ def test_over_cap_loop_keeps_one_checkpoint(spark, monkeypatch):
     assert {r["word"]: r["seq"] for r in st.collect()} == ref_state
 
 
+@pytest.mark.parametrize("fail_at", ["checkpoint", "pair_counts"])
+def test_over_cap_loop_failure_releases_checkpoints(spark, monkeypatch, fail_at):
+    """A raising UDF in the third round's checkpoint job, or in its pair
+    counts, leaves no checkpoint of the call persisted."""
+    from pyspark.sql import functions as F
+
+    @F.udf("boolean")
+    def boom(_x):
+        raise ValueError("bpe step failed")
+
+    calls = {"checkpoint": 0, "pair_counts": 0}
+    real = {"checkpoint": T._checkpoint, "pair_counts": T._bpe_pair_counts}
+
+    def failing(name):
+        def step(df):
+            calls[name] += 1
+            if name == fail_at and calls[name] == 3:
+                df = df.filter(boom(F.lit(1)))
+            return real[name](df)
+        return step
+
+    monkeypatch.setattr(T, "_BPE_DRIVER_MAX_TYPES", 0)
+    monkeypatch.setattr(T, "_BPE_CKPT_EVERY", 1)
+    monkeypatch.setattr(T, "_checkpoint", failing("checkpoint"))
+    monkeypatch.setattr(T, "_bpe_pair_counts", failing("pair_counts"))
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    with pytest.raises(Exception, match="bpe step failed"):
+        T.bpe_train(_df(spark), n_merges=6)
+    assert calls[fail_at] == 3
+    assert set(jsc.getPersistentRDDs().keys()) == before
+
+
 def test_doc_counts_match_scalar_reference(spark):
     df = _df(spark)
     _, st = T.bpe_train(df, n_merges=12)

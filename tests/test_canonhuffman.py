@@ -21,7 +21,9 @@ import numpy as np
 import pytest
 
 from gridfour_spark import canonhuffman as CH
+from gridfour_spark import compress as C
 from gridfour_spark import gvrsfile as G
+from gridfour_spark import lsop as L
 
 GOLDEN = os.path.join(os.path.dirname(__file__), "golden", "canonhuff_golden.txt")
 
@@ -67,10 +69,10 @@ def test_golden_decode(name, kind, nr, nc, vals, packing):
         np.testing.assert_array_equal(got_a, a)
         np.testing.assert_array_equal(got_b, b)
     elif kind == "tile":
-        got = np.asarray(G._decode_canon_huffman_tile(packing, nr, nc)).ravel()
+        got = C.decode_packing("GvrsCanonicalHuffman", packing, nr, nc).ravel()
         np.testing.assert_array_equal(got.astype(np.int64), vals)
     elif kind == "lsop":
-        got = np.asarray(G.decode_lsop_reference(packing, nr, nc)).ravel()
+        got = C.decode_packing("LSOP12", packing, nr, nc).ravel()
         np.testing.assert_array_equal(got.astype(np.int64), vals)
     else:
         raise AssertionError(kind)
@@ -87,10 +89,10 @@ def test_uniform_tile_special_form():
 
 def test_lsop_header_comp_type2_counts_implicit():
     """LsHeader comp_type=2 stores NO init/interior byte counts
-    (LsHeader.java:66-73 revised layout) — parse_ls_header must report the
+    (LsHeader.java:66-73 revised layout) — lsop.parse_ls_header must report the
     correct header size so the bit stream starts at the right byte."""
     smooth = [c for c in CASES if c[0] == "smooth60"][0]
-    h = G.parse_ls_header(smooth[5])
+    h = L.parse_ls_header(smooth[5])
     assert h["comp_type"] == 2
     assert h["n_init"] == 0 and h["n_interior"] == 0
     assert h["n_coeff"] == 12
@@ -183,7 +185,7 @@ def test_reference_written_compressed_store_reads_bit_exact(tmp_path, mode, expe
             name = ("STD" if n == info.standard_size_for(info.elements[0])
                     else info.codec_ids[payload[0]])
             if name == "LSOP12":
-                name += f"/ct{G.parse_ls_header(payload)['comp_type']}"
+                name += f"/ct{L.parse_ls_header(payload)['comp_type']}"
             used[name] = used.get(name, 0) + 1
     if expect_codec is not None:
         assert set(used) == {expect_codec}, used

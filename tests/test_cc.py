@@ -183,6 +183,50 @@ def test_one_task_path_runs_few_jobs(spark):
     assert len(sc.statusTracker().getJobIdsForGroup("dedup_clusters_jobs")) <= 6
 
 
+def test_checkpoint_failure_releases_its_rdd(spark):
+    """A local checkpoint whose job raises (a raising UDF) leaves no RDD
+    persisted: Spark registers the RDD before the job runs, and no handle
+    to it reaches the caller."""
+    from gridfour_spark.textops import _checkpoint
+
+    @F.udf("long")
+    def boom(_x):
+        raise ValueError("checkpoint job failed")
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    with pytest.raises(Exception, match="checkpoint job failed"):
+        _checkpoint(spark.range(10).select(boom("id").alias("id")))
+    assert set(jsc.getPersistentRDDs().keys()) == before
+
+
+@pytest.mark.parametrize("fail_at", [2, 3], ids=["edges", "labels"])
+def test_distributed_failure_releases_checkpoints(spark, force_distributed, monkeypatch, fail_at):
+    """A raising UDF in a doubling round's edge (2nd) or label (3rd)
+    checkpoint job leaves no frame of the call persisted."""
+    from gridfour_spark import textops
+
+    @F.udf("boolean")
+    def boom(_x):
+        raise ValueError("doubling round failed")
+
+    calls = [0]
+    real = textops._checkpoint
+
+    def failing(df):
+        calls[0] += 1
+        return real(df.filter(boom(F.lit(1))) if calls[0] == fail_at else df)
+
+    monkeypatch.setattr(textops, "_checkpoint", failing)
+    pairs = spark.createDataFrame([(_h(i), _h(i + 1)) for i in range(40)], "doc_a long, doc_b long")
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    with pytest.raises(Exception, match="doubling round failed"):
+        dedup_clusters(pairs)
+    assert calls[0] == fail_at
+    assert set(jsc.getPersistentRDDs().keys()) == before
+
+
 def test_distributed_path_releases_superseded_frames(spark, force_distributed):
     """Each doubling round supersedes a label and an edge checkpoint. Only
     the last label frame, which the result reads, stays persisted after

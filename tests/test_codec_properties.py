@@ -9,14 +9,20 @@ bit patterns). Pure numpy — no SparkSession, so the file runs in seconds.
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from gridfour_spark import compress as C
 from gridfour_spark import floatcodec as FC
+from gridfour_spark import gvrsfile as G
 from gridfour_spark import gvrshuffman as GH
 from gridfour_spark import huffman as H
+from gridfour_spark.spec import GridSpec
 
 _SETTINGS = dict(max_examples=40, deadline=None)
 
@@ -54,17 +60,40 @@ def test_gvrs_huffman_round_trip(data):
     st.integers(min_value=2, max_value=12),
     st.integers(min_value=0, max_value=2**32 - 1),
     st.floats(min_value=0.0, max_value=1.0),
+    st.booleans(),
+    st.booleans(),
 )
 @settings(**_SETTINGS)
-def test_tile_race_round_trip_with_nulls(nr, nc, seed, null_frac):
+def test_tile_race_round_trip_with_nulls(nr, nc, seed, null_frac, use_huffman, use_canon):
+    """The winning packing decodes to the tile through C.decode_tile and,
+    with byte 0 rewritten to its export index, to the same cells through
+    the GVRS reader's dispatch (read_tile_arrays on a one-tile file). The
+    engine's own Huffman has no reference codec, so it is never exported."""
     rng = np.random.default_rng(seed)
     v = rng.integers(-(10**6), 10**6, size=nr * nc, dtype=np.int64)
     nulls = rng.random(nr * nc) < null_frac
     v[nulls] = C.INT32_MIN
-    r = C.encode_tile(v, nr, nc, use_lsop=True, use_gvrs_huffman=True)
-    if r["kept"]:
-        got = C.decode_tile(bytes(r["payload"]), nr, nc)
-        np.testing.assert_array_equal(got.ravel().astype(np.int64), v)
+    r = C.encode_tile(
+        v, nr, nc, use_lsop=True, use_huffman=use_huffman, use_gvrs_huffman=True,
+        use_canon=use_canon,
+    )
+    if not r["kept"]:
+        return
+    p = bytes(r["payload"])
+    got = C.decode_tile(p, nr, nc).ravel()
+    np.testing.assert_array_equal(got.astype(np.int64), v)
+    if C.CODECS[p[0]] not in G._EXPORT_CODECS:
+        return
+    block = bytes([G._EXPORT_CODECS.index(C.CODECS[p[0]])]) + p[1:]
+    spec = GridSpec(
+        n_rows=nr, n_cols=nc, n_rows_in_tile=nr, n_cols_in_tile=nc,
+        x0=0.0, y0=0.0, cell_size_x=1.0, cell_size_y=1.0,
+    )
+    with tempfile.TemporaryDirectory() as d:
+        path = os.path.join(d, "tile.gvrs")
+        G.write_gvrs(path, spec, G.default_element("z", "int"), [{"tile_index": 0, "block": block}])
+        ((_, (cells,)),) = G.read_tile_arrays(path, G.parse_gvrs_header(path), [0])
+    np.testing.assert_array_equal(cells, np.where(nulls, np.nan, got))
 
 
 @given(
@@ -142,7 +171,8 @@ def test_reference_canonical_huffman_block_round_trip(values):
 @settings(**_SETTINGS)
 def test_reference_canonical_tile_round_trip(nr, nc, seed):
     """encode_tile_packing -> decode_tile over random small tiles with
-    nulls mixed in (predictor race + canonical body)."""
+    nulls mixed in (predictor race + canonical body); every packing cut
+    short raises ValueError instead of decoding to other cells."""
     from gridfour_spark import canonhuffman as CH
 
     rng = np.random.default_rng(seed)
@@ -153,6 +183,9 @@ def test_reference_canonical_tile_round_trip(nr, nc, seed):
     r = CH.encode_tile_packing(v, nr, nc)
     got = CH.decode_tile(r["payload"], nr, nc)
     np.testing.assert_array_equal(got, v)
+    for cut in range(len(r["payload"])):
+        with pytest.raises(ValueError):
+            C.decode_packing("GvrsCanonicalHuffman", r["payload"][:cut], nr, nc)
 
 
 # --- PNG codec (round 7) ---------------------------------------------------

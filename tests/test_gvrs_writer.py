@@ -377,10 +377,10 @@ def test_distributed_inspector(spark):
 
 
 def test_reference_java_reads_huffman_tile(spark):
-    """GvrsHuffman race winners export in the REFERENCE framing: the
-    engine's internal payload carries a 4-byte bit count at offset 10 that
-    CodecHuffman's format lacks (tree bits start at byte 10) — the export
-    path must strip it (code-review round 3 regression)."""
+    """GvrsHuffman race winners export in the REFERENCE framing:
+    CodecHuffman reads tree bits from byte 10, so an engine packing must
+    carry no bit count there and export rewrites only byte 0 (code-review
+    round 3 regression)."""
     import numpy as np
 
     from gridfour_spark import compress as C

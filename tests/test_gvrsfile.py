@@ -166,7 +166,7 @@ def test_lsop14_uses_huffman_legacy_header():
     Huffman residuals decoded back-to-back from one bit store."""
     import struct
 
-    from gridfour_spark.gvrsfile import parse_ls_header
+    from gridfour_spark.lsop import parse_ls_header
 
     path = os.path.join(SAMPLES, "Sample14_LSOP.gvrs")
     info = parse_gvrs_header(path)
@@ -208,20 +208,20 @@ def test_spark_cells_read(spark):
 
 
 def test_lsop8_reference_decode_path():
-    """decode_lsop_reference's LSOP-8 branch: symbol counts per
+    """lsop.decode_lsop's LSOP-8 branch: symbol counts per
     LsDecoder08.unpackInitializers ((nc-1)+nc+2*(nr-2)) and unpackInterior
     ((nr-2)*(nc-2)) — an engine LSOP-8 packing decodes exactly through the
-    reference-format path (code-review round 3 regression)."""
+    GVRS reader's dispatch (code-review round 3 regression)."""
+    from gridfour_spark import compress as C
     from gridfour_spark import lsop as L
-    from gridfour_spark.gvrsfile import decode_lsop_reference
 
     nr, nc = 20, 30
     r, c = np.meshgrid(np.arange(nr), np.arange(nc), indexing="ij")
     v = (1000 * np.sin(r * 0.2) * np.cos(c * 0.15)).astype(np.int32)
     res = L.encode_lsop8(v.ravel(), nr, nc)
     assert res is not None
-    back = decode_lsop_reference(bytes(res["payload"]), nr, nc)
-    np.testing.assert_array_equal(back.astype(np.int32), v.ravel())
+    back = C.decode_packing("LSOP08", bytes(res["payload"]), nr, nc)
+    np.testing.assert_array_equal(back.astype(np.int32), v)
 
 
 def test_extended_tile_directory_raw_offsets(tmp_path):
@@ -287,3 +287,65 @@ def test_tile_directory_bytes_extended_round_trip():
     assert len(content) == 24 + 4 * n
     got = _read_tile_directory(io.BytesIO(content), 0, info)
     assert got == small
+
+
+def _truncation_cases():
+    """(name, element type, cells, packing with the export codec index)."""
+    from gridfour_spark import canonhuffman as CH
+    from gridfour_spark import compress as C
+    from gridfour_spark import floatcodec as FC
+    from gridfour_spark import gvrsfile as G
+    from gridfour_spark import lsop as L
+
+    nr = nc = 40
+    r, c = np.meshgrid(np.arange(nr), np.arange(nc), indexing="ij")
+    smooth = np.floor(3000 * np.sin(r * 0.07) * np.cos(c * 0.05)).astype(np.int64)
+    steps = np.cumsum(np.random.default_rng(11).integers(-1, 2, nr * nc)).astype(np.int64)
+
+    def export(payload):
+        return bytes([G._EXPORT_CODECS.index(C.CODECS[payload[0]])]) + bytes(payload[1:])
+
+    deflate = C.encode_tile(smooth, nr, nc, use_huffman=False)
+    huff = C.encode_tile(steps, nr, nc, use_huffman=False, use_gvrs_huffman=True)
+    assert (deflate["codec"], huff["codec"]) == ("deflate", "huffman_gvrs")
+    return [
+        ("GvrsDeflate", "int", smooth, export(deflate["payload"])),
+        ("GvrsHuffman", "int", steps, export(huff["payload"])),
+        ("LSOP12-deflate", "int", smooth,
+         export(L.encode_lsop(smooth, nr, nc, use_canon_residuals=False)["payload"])),
+        ("LSOP12-canonical", "int", steps, export(L.encode_lsop(steps, nr, nc)["payload"])),
+        ("GvrsCanonicalHuffman", "int", smooth,
+         export(CH.encode_tile_packing(smooth, nr, nc)["payload"])),
+        ("GvrsFloat", "float", smooth / 7.0,
+         export(FC.encode_float_tile(smooth / 7.0, nr, nc))),
+    ]
+
+
+@pytest.mark.parametrize("keep", ["half", "all_but_one"])
+def test_truncated_packing_raises_value_error(tmp_path, keep):
+    """A packing cut short in the file fails loudly with ValueError, for
+    every codec the reader dispatches (the intact packing reads back)."""
+    from gridfour_spark import gvrsfile as G
+    from gridfour_spark.lsop import parse_ls_header
+    from gridfour_spark.spec import GridSpec
+
+    spec = GridSpec(
+        n_rows=40, n_cols=40, n_rows_in_tile=40, n_cols_in_tile=40,
+        x0=0.0, y0=0.0, cell_size_x=1.0, cell_size_y=1.0,
+    )
+    cases = _truncation_cases()
+    # Deflate and canonical residuals
+    assert [parse_ls_header(p)["comp_type"] for n, _, _, p in cases if n.startswith("LSOP")] == [1, 2]
+    for name, etype, cells, packing in cases:
+        element = G.default_element("z", etype)
+        cut = len(packing) // 2 if keep == "half" else len(packing) - 1
+        for block, ok in ((packing, True), (packing[:cut], False)):
+            path = str(tmp_path / f"{name}-{ok}.gvrs")
+            G.write_gvrs(path, spec, element, [{"tile_index": 0, "block": block}])
+            info = parse_gvrs_header(path)
+            if ok:
+                ((_, (vals,)),) = read_tile_arrays(path, info, [0])
+                np.testing.assert_array_equal(vals, cells.astype(np.float32).ravel(), err_msg=name)
+            else:
+                with pytest.raises(ValueError):
+                    read_tile_arrays(path, info, [0])

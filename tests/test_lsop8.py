@@ -1,5 +1,6 @@
 """LSOP-8 variant (lsop/LsOptimalPredictor08.java + LsDecoder08.java;
-shipped disabled in the reference, LsCodecUtility.java:73 — opt-in here)."""
+shipped disabled in the reference, LsCodecUtility.java:73 — the engine never
+races it, and encode_lsop8 is the oracle of lsop.decode_lsop's LSOP-8 path)."""
 
 from __future__ import annotations
 
@@ -68,7 +69,7 @@ def test_lsop8_round_trip_and_scalar_twin(shape, noise):
     v = _grid(nr, nc, noise)
     res = L.encode_lsop8(v.ravel(), nr, nc)
     assert res is not None and res["predictor"] == 8
-    back = L.decode_lsop8(res["payload"], nr, nc)
+    back = L.decode_lsop(res["payload"], nr, nc)
     np.testing.assert_array_equal(back, _scalar_decode8(res["payload"], nr, nc))
     np.testing.assert_array_equal(back, v)
 
@@ -81,7 +82,7 @@ def test_lsop8_too_small_declines():
     # undefined behavior on a singular system
     r = L.encode_lsop8(_grid(4, 4).ravel(), 4, 4)
     if r is not None:
-        np.testing.assert_array_equal(L.decode_lsop8(r["payload"], 4, 4), _grid(4, 4))
+        np.testing.assert_array_equal(L.decode_lsop(r["payload"], 4, 4), _grid(4, 4))
 
 
 def test_lsop8_compresses_smooth_dem():
