@@ -303,8 +303,8 @@ def decode_tile(payload: bytes, nr: int, nc: int) -> np.ndarray:
     return np.asarray(C.unpredict(predictor, seed, res, nr, nc)).ravel()
 
 
-# --- encoder (write direction: the engine's export race can emit ----------
-# --- GvrsCanonicalHuffman payloads the reference decodes) -----------------
+# --- encoder (write direction: GvrsCanonicalHuffman payloads the ---------
+# --- reference decodes; LSOP residual blocks and the interop tests) -------
 
 def _package_merge_lengths(counts: np.ndarray, max_len: int = 15) -> np.ndarray:
     """Optimal length-limited code lengths (boundary package-merge) — the
@@ -623,22 +623,20 @@ def _emit_text_units(v: np.ndarray, rev: np.ndarray, lens: np.ndarray,
     out.extend(np.concatenate(pv)[order], np.concatenate(pb)[order])
 
 
-ENGINE_CODEC_INDEX = C.CODECS.index("GvrsCanonicalHuffman")
-
-
 def encode_tile_packing(values: np.ndarray, nr: int, nc: int) -> dict | None:
-    """CodecCanonHuffman.encode:100-142 as the engine-race candidate: the
-    uniform-value 6-byte special form, else the best predictor's residuals
-    through one canonical block. Payload layout matches the reference
-    byte-for-byte after the codec-index remap: [index, predictor,
-    seed(4 LE), body]. Returns {predictor, payload, n_bytes} or None."""
+    """CodecCanonHuffman.encode:100-142, the interop encoder the parity
+    tests compare the codec race against: the uniform-value 6-byte special
+    form, else the best predictor's residuals through one canonical block.
+    Payload layout matches the reference byte-for-byte, byte 0 indexing
+    compress.CODECS: [index, predictor, seed(4 LE), body]. Returns
+    {predictor, payload, n_bytes} or None."""
     v = np.asarray(values, dtype=np.int64).reshape(nr, nc)
     has_nulls = bool((v == INT4_NULL_CODE).any())
     if not (v != INT4_NULL_CODE).any():
         return None  # no valid data (encode returns null)
     if not has_nulls and bool((v == v.ravel()[0]).all()):
         seed = int(v.ravel()[0])
-        payload = bytes([ENGINE_CODEC_INDEX, 0]) + (seed & 0xFFFFFFFF).to_bytes(4, "little")
+        payload = bytes([C.CODEC_CANON_INDEX, 0]) + (seed & 0xFFFFFFFF).to_bytes(4, "little")
         return {"predictor": 0, "payload": payload, "n_bytes": len(payload)}
     race = (
         {C.PREDICTOR_DIFFERENCING_NULLS: C.residuals_differencing_nulls}
@@ -658,7 +656,7 @@ def encode_tile_packing(values: np.ndarray, nr: int, nc: int) -> dict | None:
         seed, syms = r
         body = encode_block(np.asarray(syms, dtype=np.int64))
         payload = (
-            bytes([ENGINE_CODEC_INDEX, ptype])
+            bytes([C.CODEC_CANON_INDEX, ptype])
             + (int(np.int64(seed)) & 0xFFFFFFFF).to_bytes(4, "little")
             + body
         )

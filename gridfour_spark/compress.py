@@ -386,7 +386,7 @@ def _orbit(nxt: np.ndarray, n_steps: int) -> np.ndarray:
     Vectorized list ranking by pointer doubling: after pass j the first 2^j
     positions are known and `jump` is nxt composed 2^j times — O(n log n)
     gathers, no per-element Python. This is the trick that makes the
-    variable-length decode paths (M32, Huffman) columnar."""
+    variable-length decode paths (M32, GvrsHuffman) columnar."""
     starts = np.empty(n_steps, dtype=np.int64)
     starts[0] = 0
     filled = 1
@@ -457,34 +457,45 @@ def m32_decode(buf: bytes, n_symbols: int) -> np.ndarray:
 # codec table, codec race and the one decode dispatch
 # ---------------------------------------------------------------------------
 
-# packing byte 0 (the engine's codec index) -> the reference codec whose
-# packing it is: an engine packing differs from the reference packing only in
-# byte 0, which a GVRS file indexes into its own codec list. Index 3, the
-# engine's length-limited Huffman over M32 bytes (huffman.py), has no
-# reference codec and is never exported.
-CODECS = ["GvrsDeflate", "LSOP12", "GvrsFloat", "Huffman", "GvrsHuffman", "GvrsCanonicalHuffman"]
+# packing byte 0 -> codec: the GVRS writer declares this list as the file's
+# codec table, so an engine packing is the block write_gvrs stores, byte for
+# byte. The order is the reference's DEFAULT codec list
+# (GvrsFileSpecification ctor order Huffman, Deflate, Float, CanonHuffman)
+# + LSOP12, so the indexes hold even if a reader ignores the GvrsJavaCodecs
+# metadata.
+CODECS = ["GvrsHuffman", "GvrsDeflate", "GvrsFloat", "GvrsCanonicalHuffman", "LSOP12"]
 CODEC_DEFLATE_INDEX = CODECS.index("GvrsDeflate")
+CODEC_CANON_INDEX = CODECS.index("GvrsCanonicalHuffman")
 
 
-def encode_tile(
-    values: np.ndarray,
-    nr: int,
-    nc: int,
-    use_lsop: bool = False,
-    use_huffman: bool = True,
-    use_gvrs_huffman: bool = False,
-    use_canon: bool = False,
-) -> dict:
-    """Race all predictors through M32+Deflate; keep the smallest packing.
+def encode_tile(values: np.ndarray, nr: int, nc: int, use_lsop: bool = False) -> dict:
+    """Race all predictors through M32+Deflate and M32+GvrsHuffman; keep the
+    smallest packing (CodecMaster.encodeSingleThread:150-168).
 
     Returns {predictor, payload, n_bytes, standard_bytes, kept} where kept is
     False when compression did not beat the standard payload
-    (RecordManager.writeTile:448-461). With use_lsop=True the LSOP-12 codec
-    joins the race (the reference's opt-in registration,
-    lsop/LsCodecUtility.java:53-69)."""
+    (RecordManager.writeTile:448-461). A uniform tile without nulls takes the
+    reference's 6-byte canonical-Huffman special form
+    (CodecCanonHuffman.encode:100-115), which no raced packing beats. With
+    use_lsop=True the LSOP-12 codec joins the race (the reference's opt-in
+    registration, lsop/LsCodecUtility.java:53-69)."""
+    from gridfour_spark import gvrshuffman as _g
+
     v = values.reshape(nr, nc)
-    best = None
+    standard = nr * nc * 4
     has_nulls = bool((v == INT32_MIN).any())
+    if not has_nulls and int(v.min()) == int(v.max()):
+        seed = int(v.flat[0]) & 0xFFFFFFFF
+        return {
+            "predictor": 0,
+            "payload": bytes([CODEC_CANON_INDEX, 0]) + seed.to_bytes(4, "little"),
+            "n_bytes": 6,
+            "n_symbols": nr * nc - 1,
+            "codec": "canon_gvrs",
+            "standard_bytes": standard,
+            "kept": 6 < standard,
+        }
+    best = None
     if use_lsop and not has_nulls:
         from gridfour_spark import lsop as _lsop
 
@@ -525,17 +536,7 @@ def encode_tile(
         candidates = [
             ("deflate", bytes([CODEC_DEFLATE_INDEX]) + header + zlib.compress(m32, 6)),
         ]
-        if len(m32) == 0:  # 1x1 tile: no symbols, Huffman has no tree to build
-            use_huffman = use_gvrs_huffman = False
-        if use_huffman:
-            from gridfour_spark import huffman as _h
-
-            candidates.append(
-                ("huffman", bytes([_h.HUFFMAN_CODEC_INDEX]) + header + _h.huff_encode(m32))
-            )
-        if use_gvrs_huffman:  # reference tree-in-stream bitstream (format parity)
-            from gridfour_spark import gvrshuffman as _g
-
+        if len(m32):  # a 1x1 tile has no symbols, so Huffman has no tree
             candidates.append(
                 ("huffman_gvrs", bytes([_g.GVRS_HUFFMAN_CODEC_INDEX]) + header + _g.encode(m32)[1])
             )
@@ -548,22 +549,6 @@ def encode_tile(
                     "n_symbols": len(syms),
                     "codec": codec_name,
                 }
-    if use_canon:
-        # reference-format canonical Huffman (CodecCanonHuffman) — a default
-        # registered codec in the current reference; its residuals skip the
-        # M32 layer entirely and the uniform-tile special form is 6 bytes
-        from gridfour_spark import canonhuffman as _ch
-
-        r = _ch.encode_tile_packing(values, nr, nc)
-        if r is not None and (best is None or r["n_bytes"] < best["n_bytes"]):
-            best = {
-                "predictor": r["predictor"],
-                "payload": r["payload"],
-                "n_bytes": r["n_bytes"],
-                "n_symbols": nr * nc - 1,
-                "codec": "canon_gvrs",
-            }
-    standard = nr * nc * 4
     if best is None:  # no predictor could encode (e.g. all-null tile): store raw
         best = {"predictor": 0, "payload": b"", "n_bytes": standard, "n_symbols": 0, "codec": "raw"}
     best["standard_bytes"] = standard
@@ -573,8 +558,10 @@ def encode_tile(
 
 def decode_tile(packing: bytes, nr: int, nc: int) -> np.ndarray:
     """Inverse of encode_tile: byte 0 names the codec through CODECS."""
+    if not packing:
+        raise ValueError("empty packing has no codec byte")
     if packing[0] >= len(CODECS):
-        raise ValueError(f"unknown engine codec index {packing[0]}")
+        raise ValueError(f"unknown codec index {packing[0]}")
     return decode_packing(CODECS[packing[0]], packing, nr, nc)
 
 
@@ -583,7 +570,7 @@ def decode_packing(codec: str, packing: bytes, nr: int, nc: int) -> np.ndarray:
     engine frames and GVRS files alike -> (nr, nc) cells: integers, or
     float32 for GvrsFloat. A corrupt packing raises ValueError."""
     try:
-        if codec in ("GvrsDeflate", "GvrsHuffman", "Huffman"):
+        if codec in ("GvrsDeflate", "GvrsHuffman"):
             v = _decode_m32_packing(codec, packing, nr, nc)
         elif codec in ("LSOP12", "LSOP08"):
             from gridfour_spark import lsop as _l
@@ -607,8 +594,8 @@ def decode_packing(codec: str, packing: bytes, nr: int, nc: int) -> np.ndarray:
 
 def _decode_m32_packing(codec: str, packing: bytes, nr: int, nc: int) -> np.ndarray:
     """[codec][predictor][seed i32 LE][nM32 i32 LE][body]: the body codes the
-    M32 bytes with Deflate (CodecDeflate.decode:109-152), GVRS tree-in-stream
-    Huffman (CodecHuffman) or the engine's length-limited Huffman."""
+    M32 bytes with Deflate (CodecDeflate.decode:109-152) or GVRS
+    tree-in-stream Huffman (CodecHuffman.decode)."""
     if len(packing) < 10:
         raise ValueError(f"{codec} packing of {len(packing)} bytes has no header")
     ptype = packing[1]
@@ -617,14 +604,10 @@ def _decode_m32_packing(codec: str, packing: bytes, nr: int, nc: int) -> np.ndar
     body = packing[10:]
     if codec == "GvrsDeflate":
         m32 = zlib.decompress(body)
-    elif codec == "GvrsHuffman":
+    else:
         from gridfour_spark import gvrshuffman as _g
 
         m32 = _g.decode(8 * len(body), body, n_m32)
-    else:
-        from gridfour_spark import huffman as _h
-
-        m32 = _h.huff_decode(body)
     if len(m32) != n_m32:
         raise ValueError(f"{codec} packing holds {len(m32)} M32 bytes, header says {n_m32}")
     return unpredict(ptype, seed, m32_decode(m32, n_symbols_for(ptype, nr, nc)), nr, nc)

@@ -32,6 +32,8 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
+from gridfour_spark import compress as C
+
 INT4_NULL_CODE = -(1 << 31)  # GridfourConstants.INT4_NULL_CODE
 
 _ETYPE_NAMES = {0: "int", 1: "icf", 2: "float", 3: "short"}
@@ -506,9 +508,9 @@ def read_tile_arrays(path: str, info: GvrsInfo, tile_indexes, positions=None) ->
     Pure function of (file bytes, header) — safe to call inside executors.
     ``positions`` (tile_index -> content pos) overrides info.tile_positions,
     letting callers pass directory rows they already hold (the bounded-open
-    path ships positions in the dataframe, not the broadcast header)."""
-    from gridfour_spark import compress as C
-
+    path ships positions in the dataframe, not the broadcast header). A
+    short read, an empty packing or a codec byte outside the file's codec
+    list raises ValueError."""
     out = []
     nr, nc = info.tile_rows, info.tile_cols
     n_cells = nr * nc
@@ -522,11 +524,17 @@ def read_tile_arrays(path: str, info: GvrsInfo, tile_indexes, positions=None) ->
             f.read(4)  # tileIndex echo (RecordManager.readTile:502)
             arrays = []
             for e in info.elements:
-                n = struct.unpack("<i", f.read(4))[0]
-                payload = f.read(n)
+                head = f.read(4)
+                n = struct.unpack("<i", head)[0] if len(head) == 4 else 0
+                payload = f.read(n) if n > 0 else b""
+                if n <= 0 or len(payload) != n:
+                    raise ValueError(f"tile {tile_index}: record of {n} bytes, read {len(payload)}")
                 if n == info.standard_size_for(e):  # raw (shorts padded to 4)
                     raw = np.frombuffer(payload, dtype=_RAW_DTYPES[e.etype])[:n_cells]
                 else:  # byte 0 indexes the file's codec list
+                    if payload[0] >= len(info.codec_ids):
+                        raise ValueError(f"tile {tile_index}: codec index {payload[0]} outside "
+                                         f"the file's codec list {info.codec_ids}")
                     codec = info.codec_ids[payload[0]]
                     if (codec == "GvrsFloat") != (e.etype == "float"):
                         raise ValueError(f"tile {tile_index}: codec {codec} for a {e.etype} element")
@@ -793,12 +801,8 @@ def gvrs_cells(
 # (interop/export packaging; the engine's production sink stays the bucketed
 # parquet store).
 
-# export codec table: FILE index order is the reference's DEFAULT codec list
-# (GvrsFileSpecification ctor order Huffman, Deflate, Float, CanonHuffman)
-# + LSOP12, so the payload indexes work even if a reader ignores the
-# GvrsJavaCodecs metadata. An engine packing exports by rewriting byte 0 from
-# its compress.CODECS index to the index of the same name here.
-_EXPORT_CODECS = ["GvrsHuffman", "GvrsDeflate", "GvrsFloat", "GvrsCanonicalHuffman", "LSOP12"]
+# the writer declares compress.CODECS as the file's codec table, so an engine
+# packing is stored unchanged; the Java class of each entry, in that order.
 # NOTE the trailing newline: CodecSpecification.specificationStringParse
 # only commits a spec line when it sees '\n', so an unterminated last line
 # is silently dropped (and the codec indexes shift at decode time)
@@ -840,16 +844,14 @@ def default_element(name: str = "z", etype: str = "int", **kw) -> GvrsElement:
 
 
 def encode_tile_payload(
-    v: np.ndarray, nr: int, nc: int, element: GvrsElement, compress: bool = True,
-    use_canon: bool = False,
+    v: np.ndarray, nr: int, nc: int, element: GvrsElement, compress: bool = True
 ) -> bytes:
     """ONE tile's cells (float64, NaN = unset) -> a GVRS-format payload:
-    the engine codec race (GVRS-bitstream Huffman, Deflate predictors,
-    LSOP-12, float planes) remapped to the export codec indexes; standard
-    (uncompressed) form when the race does not win
+    the float planes for float elements, else compress.encode_tile's packing
+    verbatim (the file declares compress.CODECS); standard (uncompressed)
+    form when the packing is not smaller than the element's standard size
     (RecordManager.writeTile:448-461). Pure function so both the Spark
     export kernel and the per-shard compaction executors share it."""
-    from gridfour_spark import compress as C
     from gridfour_spark import floatcodec as FC
 
     etype = element.etype
@@ -873,35 +875,16 @@ def encode_tile_payload(
         ints = v.copy()
         ints[nan] = fill
     ints = ints.astype(np.int64)
-    if (
-        compress
-        and ints.size * (2 if etype == "short" else 4) > 6  # beats the std form
-        and int(ints.min()) == int(ints.max())
-    ):
-        # uniform tile: the reference's canonical-Huffman special form is
-        # 6 bytes flat (CodecCanonHuffman.encode:100-115 / decode:171-177)
-        # — unconditionally better than any raced packing; emitted with
-        # the EXPORT codec index directly
-        return bytes([_EXPORT_CODECS.index("GvrsCanonicalHuffman"), 0]) + (
-            int(ints[0]) & 0xFFFFFFFF
-        ).to_bytes(4, "little")
-    r = (
-        C.encode_tile(
-            ints, nr, nc, use_lsop=True, use_huffman=False,
-            use_gvrs_huffman=True, use_canon=use_canon,
-        )
-        if compress
-        else {"kept": False, "n_bytes": 0, "payload": b""}
-    )
     if etype == "short":
         std = ints.astype("<i2").tobytes()
         if len(std) & 2:
             std += b"\x00\x00"  # pad odd cell counts to 4
     else:
         std = ints.astype("<i4").tobytes()
-    if compress and r["kept"] and r["n_bytes"] < len(std):
-        p = bytes(r["payload"])
-        return bytes([_EXPORT_CODECS.index(C.CODECS[p[0]])]) + p[1:]
+    if compress:
+        r = C.encode_tile(ints, nr, nc, use_lsop=True)
+        if r["n_bytes"] < len(std):
+            return bytes(r["payload"])
     return std
 
 
@@ -1135,8 +1118,8 @@ def write_gvrs(
     for e in elements:
         body += _element_spec_bytes(e, len(head) + len(body))
     if compressed:
-        body += struct.pack("<i", len(_EXPORT_CODECS))
-        for cid in _EXPORT_CODECS:
+        body += struct.pack("<i", len(C.CODECS))
+        for cid in C.CODECS:
             body += _le_utf(cid)
     else:
         body += struct.pack("<i", 0)
@@ -1170,7 +1153,7 @@ def write_gvrs(
                 s = _EXPORT_JAVA_CODECS.encode()
                 metas.append(("GvrsJavaCodecs", 0, 9, struct.pack("<i", len(s)) + s,
                               "Class paths for Java compressors"))
-                s2 = "|".join(_EXPORT_CODECS).encode()
+                s2 = "|".join(C.CODECS).encode()
                 metas.append(("GvrsCompressionCodecs", 0, 9, struct.pack("<i", len(s2)) + s2,
                               "Compession codecs"))
             metas.extend(extra_metadata or [])
@@ -1565,16 +1548,16 @@ def spec_from_info(info: GvrsInfo):
 
 
 def _export_codec_remap(codec_ids: list) -> list[int] | None:
-    """Source-file codec index -> _EXPORT_CODECS index (by NAME), or None
+    """Source-file codec index -> compress.CODECS index (by NAME), or None
     when the source order already matches. Raw-copied compressed payloads
     carry their codec index in byte 0; a rewritten store declares
-    _EXPORT_CODECS, so indexes must be re-based when orders differ."""
+    compress.CODECS, so indexes must be re-based when orders differ."""
     try:
-        remap = [_EXPORT_CODECS.index(n) for n in codec_ids]
+        remap = [C.CODECS.index(n) for n in codec_ids]
     except ValueError as exc:
         raise NotImplementedError(
             f"source codec list {codec_ids} has entries outside the export "
-            f"set {_EXPORT_CODECS}; decode+re-encode those tiles instead"
+            f"set {C.CODECS}; decode+re-encode those tiles instead"
         ) from exc
     return None if remap == list(range(len(remap))) else remap
 
@@ -1582,7 +1565,7 @@ def _export_codec_remap(codec_ids: list) -> list[int] | None:
 def raw_tile_blocks(spark, path: str, exclude_tiles=None, exclude_df=None):
     """(tile_index, element, block) — tile payloads copied VERBATIM from an
     existing store (no decode, no re-encode), range-read by executors.
-    Compressed payloads get their codec byte re-based onto _EXPORT_CODECS
+    Compressed payloads get their codec byte re-based onto compress.CODECS
     when the source declared a different codec order; sizes never change.
     This is the pass-through half of update_gvrs (the reference analogue:
     RecordManager re-uses the stored record, RecordManager.java:218-384).

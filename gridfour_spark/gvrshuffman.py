@@ -16,10 +16,8 @@ BEFORE existing nodes of equal count, which fixes the tree shape and makes
 the bitstream reproducible. Encode parity is pinned by golden vectors
 generated from the compiled reference classes (tests/test_gvrshuffman.py).
 
-The canonical length-limited codec in huffman.py remains the default race
-member (its 2^16 table decode is faster); this module exists for format
-parity and is raced opt-in (compress.encode_tile(use_gvrs_huffman=True)).
-A GvrsHuffman tile packing, in engine frames and files alike, is the
+Every codec race (compress.encode_tile) runs it over each predictor's M32
+bytes. A GvrsHuffman tile packing, in engine frames and files alike, is the
 CodecHuffman layout: the 10-byte M32 header, then this bitstream with no
 bit count, so decode_stream stops after n_symbols.
 """
@@ -106,7 +104,8 @@ def encode(data: bytes) -> tuple[int, bytes]:
     for k in range(8):
         header[k] = ((n_leaves - 1) >> k) & 1
 
-    # vectorized text-section scatter (same shape as huffman.huff_encode)
+    # vectorized text-section scatter: one cumsum of code lengths gives
+    # every symbol's bit offset
     lengths = np.zeros(256, dtype=np.int64)
     for s, c in codes.items():
         lengths[s] = len(c)
@@ -125,9 +124,10 @@ def encode(data: bytes) -> tuple[int, bytes]:
 
 
 def decode(n_bits: int, packed: bytes, n_symbols: int) -> bytes:
-    """Parse the in-stream tree, then decode the text section — table-driven
-    and pointer-doubled like huffman.huff_decode when max code length <= 16,
-    per-symbol walk otherwise (HuffmanDecoder semantics either way)."""
+    """Parse the in-stream tree, then decode the text section — a 2^16
+    window table plus pointer doubling (compress._orbit) when the max code
+    length is <= 16, a per-symbol walk otherwise (HuffmanDecoder semantics
+    either way)."""
     bits = np.unpackbits(np.frombuffer(packed, dtype=np.uint8), bitorder="little")[:n_bits]
     out, _ = decode_stream(bits, 0, n_symbols)
     return out

@@ -40,7 +40,7 @@ def compress_tiles(tiles: DataFrame, spec: GridSpec, use_lsop: bool = True) -> D
             for _, row in pdf.iterrows():
                 v = np.asarray(row["cells"], dtype=np.float64)
                 vi = v.astype(np.int32)
-                best = C.encode_tile(vi, nr, nc, use_lsop=use_lsop, use_gvrs_huffman=True)
+                best = C.encode_tile(vi, nr, nc, use_lsop=use_lsop)
                 kept = bool(best["kept"])
                 payload = bytes(best["payload"]) if kept else vi.tobytes()
                 rows.append(
@@ -67,8 +67,10 @@ def compress_tiles(tiles: DataFrame, spec: GridSpec, use_lsop: bool = True) -> D
 
 def decompress_tiles(compressed: DataFrame, spec: GridSpec) -> DataFrame:
     """Inverse kernel: per-tile payload -> cells array (RecordManager.readTile
-    dispatch on stored codec, :492-515)."""
+    dispatch on stored codec, :492-515). A raw payload of other than the
+    standard size raises ValueError."""
     nr, nc = spec.n_rows_in_tile, spec.n_cols_in_tile
+    standard = nr * nc * 4
     out_schema = "tile_index long, tile_row long, tile_col long, n_cells int, cells array<double>"
 
     def kernel(batches):
@@ -77,6 +79,11 @@ def decompress_tiles(compressed: DataFrame, spec: GridSpec) -> DataFrame:
             for _, row in pdf.iterrows():
                 payload = bytes(row["payload"])
                 if row["codec"] == "raw":
+                    if len(payload) != standard:
+                        raise ValueError(
+                            f"tile {row['tile_index']}: raw payload of {len(payload)} bytes, "
+                            f"standard size is {standard}"
+                        )
                     v = np.frombuffer(payload, dtype=np.int32)
                 else:  # byte 0 names the codec
                     v = C.decode_tile(payload, nr, nc).ravel()
@@ -125,7 +132,7 @@ def compress_tiles_multi(
                 vi = np.asarray(by_el[el]["cells"], dtype=np.float64).astype(np.int32)
             else:
                 vi = np.full(nr * nc, fill, dtype=np.int32)
-            best = C.encode_tile(vi, nr, nc, use_lsop=use_lsop, use_gvrs_huffman=True)
+            best = C.encode_tile(vi, nr, nc, use_lsop=use_lsop)
             if best["kept"]:
                 data = bytes(best["payload"])
                 codecs.append(f"{el}:{best['codec']}")
@@ -157,7 +164,8 @@ def decompress_tiles_multi(
 ) -> DataFrame:
     """Inverse of compress_tiles_multi: walk the [length][data] sets
     (RecordManager.readTile dispatch: standard length = raw copy, shorter =
-    codec decode), one output row per (element, tile)."""
+    codec decode), one output row per (element, tile). A walk that leaves
+    the payload or does not end at its end raises ValueError."""
     nr, nc = spec.n_rows_in_tile, spec.n_cols_in_tile
     standard = nr * nc * 4
     out_schema = "element string, tile_index long, tile_row long, tile_col long, cells array<double>"
@@ -173,6 +181,11 @@ def decompress_tiles_multi(
                     pos += 4
                     data = payload[pos : pos + ln]
                     pos += ln
+                    if pos > len(payload):
+                        raise ValueError(
+                            f"tile {row['tile_index']}: element {el} runs past the "
+                            f"{len(payload)}-byte record"
+                        )
                     if ln == standard:
                         v = np.frombuffer(data, dtype=np.int32)
                     else:
@@ -185,6 +198,11 @@ def decompress_tiles_multi(
                             "tile_col": row["tile_col"],
                             "cells": v.astype(np.float64),
                         }
+                    )
+                if pos != len(payload):
+                    raise ValueError(
+                        f"tile {row['tile_index']}: {len(payload) - pos} bytes after the "
+                        f"last element"
                     )
             yield pd.DataFrame(rows)
 

@@ -328,7 +328,7 @@ def test_export_uniform_tile_uses_canonical_special_form(tmp_path):
     v = np.full(480, 1234.0)
     payload = G.encode_tile_payload(v, 20, 24, e, compress=True)
     assert len(payload) == 6
-    assert payload[0] == G._EXPORT_CODECS.index("GvrsCanonicalHuffman")
+    assert payload[0] == C.CODECS.index("GvrsCanonicalHuffman")
     path = str(tmp_path / "u.gvrs")
     G.write_gvrs(path, spec, e, [{"tile_index": 0, "block": payload}])
     info = G.parse_gvrs_header(path)

@@ -21,7 +21,6 @@ from gridfour_spark import compress as C
 from gridfour_spark import floatcodec as FC
 from gridfour_spark import gvrsfile as G
 from gridfour_spark import gvrshuffman as GH
-from gridfour_spark import huffman as H
 from gridfour_spark.spec import GridSpec
 
 _SETTINGS = dict(max_examples=40, deadline=None)
@@ -44,12 +43,6 @@ def test_m32_round_trip(values):
 
 @given(st.binary(min_size=1, max_size=600))
 @settings(**_SETTINGS)
-def test_canonical_huffman_round_trip(data):
-    assert H.huff_decode(H.huff_encode(data)) == data
-
-
-@given(st.binary(min_size=1, max_size=600))
-@settings(**_SETTINGS)
 def test_gvrs_huffman_round_trip(data):
     n_bits, packed = GH.encode(data)
     assert GH.decode(n_bits, packed, len(data)) == data
@@ -60,38 +53,34 @@ def test_gvrs_huffman_round_trip(data):
     st.integers(min_value=2, max_value=12),
     st.integers(min_value=0, max_value=2**32 - 1),
     st.floats(min_value=0.0, max_value=1.0),
-    st.booleans(),
-    st.booleans(),
 )
 @settings(**_SETTINGS)
-def test_tile_race_round_trip_with_nulls(nr, nc, seed, null_frac, use_huffman, use_canon):
-    """The winning packing decodes to the tile through C.decode_tile and,
-    with byte 0 rewritten to its export index, to the same cells through
-    the GVRS reader's dispatch (read_tile_arrays on a one-tile file). The
-    engine's own Huffman has no reference codec, so it is never exported."""
+def test_tile_race_round_trip_with_nulls(nr, nc, seed, null_frac):
+    """The winning packing decodes to the tile through C.decode_tile, is the
+    very block the GVRS export writes for the tile, and reads back to the
+    same cells through the GVRS reader's dispatch (read_tile_arrays on a
+    one-tile file)."""
     rng = np.random.default_rng(seed)
     v = rng.integers(-(10**6), 10**6, size=nr * nc, dtype=np.int64)
     nulls = rng.random(nr * nc) < null_frac
     v[nulls] = C.INT32_MIN
-    r = C.encode_tile(
-        v, nr, nc, use_lsop=True, use_huffman=use_huffman, use_gvrs_huffman=True,
-        use_canon=use_canon,
-    )
+    r = C.encode_tile(v, nr, nc, use_lsop=True)
+    element = G.default_element("z", "int")
+    block = G.encode_tile_payload(np.where(nulls, np.nan, v), nr, nc, element)
     if not r["kept"]:
+        assert block == v.astype("<i4").tobytes()
         return
     p = bytes(r["payload"])
+    assert block == p
     got = C.decode_tile(p, nr, nc).ravel()
     np.testing.assert_array_equal(got.astype(np.int64), v)
-    if C.CODECS[p[0]] not in G._EXPORT_CODECS:
-        return
-    block = bytes([G._EXPORT_CODECS.index(C.CODECS[p[0]])]) + p[1:]
     spec = GridSpec(
         n_rows=nr, n_cols=nc, n_rows_in_tile=nr, n_cols_in_tile=nc,
         x0=0.0, y0=0.0, cell_size_x=1.0, cell_size_y=1.0,
     )
     with tempfile.TemporaryDirectory() as d:
         path = os.path.join(d, "tile.gvrs")
-        G.write_gvrs(path, spec, G.default_element("z", "int"), [{"tile_index": 0, "block": block}])
+        G.write_gvrs(path, spec, element, [{"tile_index": 0, "block": block}])
         ((_, (cells,)),) = G.read_tile_arrays(path, G.parse_gvrs_header(path), [0])
     np.testing.assert_array_equal(cells, np.where(nulls, np.nan, got))
 

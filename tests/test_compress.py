@@ -97,6 +97,22 @@ def test_encode_tile_incompressible_not_kept():
     assert not res["kept"]  # random int32 noise cannot beat 4 bytes/cell
 
 
+def test_encode_tile_uniform_tile_takes_canonical_special_form():
+    """A constant tile without nulls is the 6-byte CodecCanonHuffman form
+    (encode:100-115); a constant all-null tile is not encodable and stays raw."""
+    res = C.encode_tile(np.full(480, -773, np.int64), 20, 24, use_lsop=True)
+    assert (res["codec"], res["n_bytes"], res["kept"]) == ("canon_gvrs", 6, True)
+    assert res["payload"][0] == C.CODECS.index("GvrsCanonicalHuffman")
+    np.testing.assert_array_equal(C.decode_tile(res["payload"], 20, 24), np.full((20, 24), -773))
+    assert C.encode_tile(np.full(480, C.INT32_MIN, np.int64), 20, 24)["codec"] == "raw"
+
+
+@pytest.mark.parametrize("packing", [b"", bytes([len(C.CODECS)]) + bytes(20)], ids=["empty", "codec"])
+def test_decode_tile_malformed_packing_raises_value_error(packing):
+    with pytest.raises(ValueError):
+        C.decode_tile(packing, 4, 4)
+
+
 def test_bits_per_sample_smooth_dem():
     """Smooth synthetic DEM should land in the few-bits-per-sample regime the
     reference reports for real DEMs (README.md:111-112 ~5.5 b/s on GEBCO)."""
@@ -108,33 +124,6 @@ def test_bits_per_sample_smooth_dem():
     bps = C.bits_per_sample(res["n_bytes"], v.size)
     assert res["kept"]
     assert bps < 8.0, bps
-
-
-def test_huffman_round_trip_and_race():
-    """C7/C8: Huffman joins the codec race; round trip through decode_tile's
-    codec dispatch (CodecMaster.decode:195-202)."""
-    from gridfour_spark import huffman as H
-
-    rng = np.random.default_rng(5)
-    # geometric-ish residual distribution favors Huffman's small table
-    v = np.cumsum(rng.integers(-3, 4, size=(20, 30)), axis=1).astype(np.int32)
-    res = C.encode_tile(v.ravel(), 20, 30, use_huffman=True)
-    back = C.decode_tile(res["payload"], 20, 30)
-    np.testing.assert_array_equal(back, v)
-
-    # force-huffman payload decodes identically
-    seed, syms = C.PREDICTORS[res["predictor"]][0](v)
-    m32 = C.m32_encode(syms)
-    header = bytes([res["predictor"]]) + int(np.int64(seed) & 0xFFFFFFFF).to_bytes(4, "little") + len(m32).to_bytes(4, "little")
-    forced = bytes([H.HUFFMAN_CODEC_INDEX]) + header + H.huff_encode(m32)
-    np.testing.assert_array_equal(C.decode_tile(forced, 20, 30), v)
-
-
-def test_huffman_edge_streams():
-    from gridfour_spark import huffman as H
-
-    for data in [bytes(500), bytes([3] * 7), bytes(range(256)) * 4]:
-        assert H.huff_decode(H.huff_encode(data)) == data
 
 
 # --- C4: differencing-with-nulls -------------------------------------------
@@ -314,59 +303,6 @@ def test_m32_vectorized_decode_matches_scalar():
             C.m32_decode(buf, len(s)), C.m32_decode_scalar(buf, len(s))
         )
         np.testing.assert_array_equal(C.m32_decode(buf, len(s)), s)
-
-
-def test_huffman_length_cap_and_optimality():
-    """C8: package-merge keeps every code <= 16 bits even on pathological
-    skew, stays Kraft-complete, and round-trips."""
-    import zlib
-
-    from gridfour_spark import huffman as H
-
-    # fibonacci-ish counts would exceed 16 bits without length limiting
-    data = b"".join(bytes([i]) * (2 ** min(i, 20)) for i in range(24))
-    enc = H.huff_encode(data)
-    tlen = int.from_bytes(enc[0:2], "little")
-    lengths = np.frombuffer(zlib.decompress(enc[2 : 2 + tlen]), dtype=np.uint8)
-    assert int(lengths.max()) <= H.MAX_CODE_LEN
-    assert sum(2.0 ** -int(l) for l in lengths if l) == 1.0
-    assert H.huff_decode(enc) == data
-
-
-def test_huffman_legacy_long_code_decode():
-    """Payloads persisted by the pre-package-merge encoder may carry code
-    lengths up to 32 bits; huff_decode must fall back to the first-code walk
-    instead of raising (ADVICE round 2)."""
-    import zlib
-
-    from gridfour_spark import huffman as H
-
-    # Kraft-complete length set with max length 18 > MAX_CODE_LEN:
-    # lengths 1,2,...,17,18,18 over symbols 0..18
-    lengths = np.zeros(256, dtype=np.uint8)
-    for s in range(17):
-        lengths[s] = s + 1
-    lengths[17] = lengths[18] = 18
-    assert sum(2.0 ** -int(l) for l in lengths if l) == 1.0
-    codes = H.canonical_codes(lengths)
-
-    rng = np.random.default_rng(7)
-    data = bytes(rng.integers(0, 19, size=500, dtype=np.uint8))
-    bits = []
-    for s in data:
-        l = int(lengths[s])
-        c = int(codes[s])
-        bits.extend((c >> (l - 1 - k)) & 1 for k in range(l))
-    stream = np.packbits(np.array(bits, dtype=np.uint8), bitorder="big").tobytes()
-    table = zlib.compress(lengths.tobytes(), 9)
-    packed = (
-        len(table).to_bytes(2, "little")
-        + table
-        + len(bits).to_bytes(4, "little")
-        + len(data).to_bytes(4, "little")
-        + stream
-    )
-    assert H.huff_decode(packed) == data
 
 
 def test_nulls_predictor_reference_test_vector():

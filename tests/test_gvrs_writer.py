@@ -379,8 +379,8 @@ def test_distributed_inspector(spark):
 def test_reference_java_reads_huffman_tile(spark):
     """GvrsHuffman race winners export in the REFERENCE framing:
     CodecHuffman reads tree bits from byte 10, so an engine packing must
-    carry no bit count there and export rewrites only byte 0 (code-review
-    round 3 regression)."""
+    carry no bit count there; export stores the packing unchanged
+    (code-review round 3 regression)."""
     import numpy as np
 
     from gridfour_spark import compress as C
@@ -388,7 +388,7 @@ def test_reference_java_reads_huffman_tile(spark):
     rng = np.random.default_rng(11)
     nr = nc = 40
     v = np.cumsum(rng.integers(-1, 2, size=nr * nc)).astype(np.int64)
-    r = C.encode_tile(v, nr, nc, use_lsop=False, use_huffman=False, use_gvrs_huffman=True)
+    r = C.encode_tile(v, nr, nc, use_lsop=True)  # the export's race
     assert r["kept"] and r["codec"] == "huffman_gvrs"  # the scenario is real
 
     spec = GridSpec(

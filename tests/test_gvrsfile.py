@@ -290,11 +290,10 @@ def test_tile_directory_bytes_extended_round_trip():
 
 
 def _truncation_cases():
-    """(name, element type, cells, packing with the export codec index)."""
+    """(name, element type, cells, packing)."""
     from gridfour_spark import canonhuffman as CH
     from gridfour_spark import compress as C
     from gridfour_spark import floatcodec as FC
-    from gridfour_spark import gvrsfile as G
     from gridfour_spark import lsop as L
 
     nr = nc = 40
@@ -302,22 +301,17 @@ def _truncation_cases():
     smooth = np.floor(3000 * np.sin(r * 0.07) * np.cos(c * 0.05)).astype(np.int64)
     steps = np.cumsum(np.random.default_rng(11).integers(-1, 2, nr * nc)).astype(np.int64)
 
-    def export(payload):
-        return bytes([G._EXPORT_CODECS.index(C.CODECS[payload[0]])]) + bytes(payload[1:])
-
-    deflate = C.encode_tile(smooth, nr, nc, use_huffman=False)
-    huff = C.encode_tile(steps, nr, nc, use_huffman=False, use_gvrs_huffman=True)
+    deflate = C.encode_tile(smooth, nr, nc)
+    huff = C.encode_tile(steps, nr, nc)
     assert (deflate["codec"], huff["codec"]) == ("deflate", "huffman_gvrs")
     return [
-        ("GvrsDeflate", "int", smooth, export(deflate["payload"])),
-        ("GvrsHuffman", "int", steps, export(huff["payload"])),
+        ("GvrsDeflate", "int", smooth, deflate["payload"]),
+        ("GvrsHuffman", "int", steps, huff["payload"]),
         ("LSOP12-deflate", "int", smooth,
-         export(L.encode_lsop(smooth, nr, nc, use_canon_residuals=False)["payload"])),
-        ("LSOP12-canonical", "int", steps, export(L.encode_lsop(steps, nr, nc)["payload"])),
-        ("GvrsCanonicalHuffman", "int", smooth,
-         export(CH.encode_tile_packing(smooth, nr, nc)["payload"])),
-        ("GvrsFloat", "float", smooth / 7.0,
-         export(FC.encode_float_tile(smooth / 7.0, nr, nc))),
+         L.encode_lsop(smooth, nr, nc, use_canon_residuals=False)["payload"]),
+        ("LSOP12-canonical", "int", steps, L.encode_lsop(steps, nr, nc)["payload"]),
+        ("GvrsCanonicalHuffman", "int", smooth, CH.encode_tile_packing(smooth, nr, nc)["payload"]),
+        ("GvrsFloat", "float", smooth / 7.0, FC.encode_float_tile(smooth / 7.0, nr, nc)),
     ]
 
 
@@ -349,3 +343,39 @@ def test_truncated_packing_raises_value_error(tmp_path, keep):
             else:
                 with pytest.raises(ValueError):
                     read_tile_arrays(path, info, [0])
+
+
+@pytest.mark.parametrize("fault", ["short_read", "empty_packing", "codec_byte"])
+def test_malformed_record_raises_value_error(tmp_path, fault):
+    """A record cut short by the end of the file, a zero-length packing or a
+    codec byte outside the file's codec list fails loudly with ValueError."""
+    import struct
+
+    from gridfour_spark import gvrsfile as G
+    from gridfour_spark.spec import GridSpec
+
+    nr = nc = 40
+    spec = GridSpec(
+        n_rows=nr, n_cols=nc, n_rows_in_tile=nr, n_cols_in_tile=nc,
+        x0=0.0, y0=0.0, cell_size_x=1.0, cell_size_y=1.0,
+    )
+    element = G.default_element("z", "int")
+    r, c = np.meshgrid(np.arange(nr), np.arange(nc), indexing="ij")
+    # a short read of a raw record must not return a short array
+    compressed = fault != "short_read"
+    block = G.encode_tile_payload((r * 3 + c).astype(np.float64).ravel(), nr, nc, element, compressed)
+    path = str(tmp_path / "t.gvrs")
+    G.write_gvrs(path, spec, element, [{"tile_index": 0, "block": block}])
+    info = parse_gvrs_header(path)
+    pos = info.tile_positions[0]  # [tile index][length][packing]
+    with open(path, "r+b") as f:
+        if fault == "short_read":
+            f.truncate(pos + 8 + len(block) // 2)  # a whole number of cells
+        elif fault == "empty_packing":
+            f.seek(pos + 4)
+            f.write(struct.pack("<i", 0))
+        else:
+            f.seek(pos + 8)
+            f.write(bytes([len(info.codec_ids)]))
+    with pytest.raises(ValueError):
+        read_tile_arrays(path, info, [0])

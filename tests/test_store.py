@@ -172,3 +172,34 @@ def test_multi_element_tiles_round_trip(spark):
             assert b[k] == 2 * v
         else:
             assert b[k] == fill
+
+
+def test_decompress_tiles_raw_payload_of_wrong_size_raises(spark):
+    """A raw record must hold exactly the standard payload."""
+    from gridfour_spark import tilecodec
+    from gridfour_spark.spec import GridSpec
+
+    spec = GridSpec(n_rows=4, n_cols=4, n_rows_in_tile=4, n_cols_in_tile=4)
+    comp = spark.createDataFrame(
+        [(0, 0, 0, 16, "raw", 0, 60, 64, False, bytes(60), 0)], tilecodec.COMPRESSED_SCHEMA
+    )
+    with pytest.raises(Exception, match="ValueError: tile 0: raw payload of 60 bytes"):
+        tilecodec.decompress_tiles(comp, spec).collect()
+
+
+@pytest.mark.parametrize(
+    "tail,message", [(b"\x00", "1 bytes after the last element"), (None, "runs past")]
+)
+def test_decompress_tiles_multi_walk_must_end_at_record_end(spark, tail, message):
+    """The [length][data] walk must stay inside the record and end at its end."""
+    from gridfour_spark import tilecodec
+    from gridfour_spark.spec import GridSpec
+
+    spec = GridSpec(n_rows=4, n_cols=4, n_rows_in_tile=4, n_cols_in_tile=4)
+    record = 2 * ((64).to_bytes(4, "little") + bytes(64))
+    record = record + tail if tail else record[:-1]
+    comp = spark.createDataFrame(
+        [(0, 0, 0, 2, len(record), 128, "a:raw,b:raw", record, 0)], tilecodec.MULTI_SCHEMA
+    )
+    with pytest.raises(Exception, match=f"ValueError: tile 0: .*{message}"):
+        tilecodec.decompress_tiles_multi(comp, spec, elements=["a", "b"]).collect()
